@@ -134,29 +134,12 @@ object ExtractPipeline {
     val par = tableParallelism.min(tableSeq.size).max(1)
     val results: Seq[TableResult] =
       if (par <= 1) tableSeq.map { case (t, tc) => runTable(t, tc) }
-      else {
-        // bounded pool; Future.traverse preserves input (table-name)
-        // order in the result, and any table's failure propagates before
-        // the watermark commit below — crash consistency is unchanged
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(
-          Future.traverse(tableSeq) { case (t, tc) => Future(runTable(t, tc)) },
-          Duration.Inf)
-        catch {
-          case t: Throwable =>
-            // a table failed: don't leave sibling extracts running as
-            // orphans after extract() has thrown — a same-JVM retry
-            // would race them on the table directories. Drop queued
-            // work, then block until in-flight tables drain.
-            pool.shutdownNow()
-            pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
-            throw t
-        }
-        finally pool.shutdown()
-      }
+      else
+        // input (table-name) order in the result; any table's failure
+        // stops the siblings and propagates before the watermark commit
+        // below — crash consistency is unchanged
+        graft.Parallel.all(spark.sparkContext, par)(
+          tableSeq.map { case (t, tc) => () => runTable(t, tc) })
 
     // K5 commit point — strictly after all tables succeeded.
     val wm = Watermark(config.subgraph, cat.deployment, nowMillis,

@@ -94,13 +94,6 @@ object IngestionPipeline {
       numBands: Int = Dedup.DefaultNumBands,
       thresholdE4: Long = Dedup.IncrementalLshThresholdE4,
       strictBatch: Boolean = false): IngestResult = {
-    val timing = sys.env.contains("GRAFT_INGEST_TIMING")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (timing) {
-      val t1 = System.nanoTime()
-      println(f"[ingest-timing] $tag%-18s ${(t1 - t0) / 1e9}%8.2f s")
-      t0 = t1
-    }
     val conf = spark.sparkContext.hadoopConfiguration
     val prev = Watermark.read(storeRoot, conf)
     val newPlan = Partitioner.plan(0L, latestDocId, tierSizes)
@@ -140,7 +133,6 @@ object IngestionPipeline {
       .where(col("doc_id") >= prevCov && col("doc_id") < newCov)
       .persist()
     val nSeen = newDocs.count()
-    lap("newDocs")
 
     val (regBands, regSets, regHashes) =
       Dedup.registryIndexFromRows(oldIdx, numHashes, numBands)
@@ -172,7 +164,6 @@ object IngestionPipeline {
     // severing contract is unchanged — only the job that pays for it
     // moved; the eager form ran a dedicated per-batch checkpoint job)
     val verdictsCh = vRaw.localCheckpoint(false)
-    lap("probe")
 
     // is_dup is a function of the content, so the batch canonical per
     // content (cid, from the probe's collapse) IS the min admitted doc
@@ -196,7 +187,6 @@ object IngestionPipeline {
     // probe's lazy checkpoint severs here (before any write), and the
     // shared newDocs/verdict blocks fill once under the block locks
     Dedup.fillCaches(allAdmitted, allIdx)
-    lap("allAdmittedIdx")
     // Bulk tiled sink (ONE distributed job per table, not a sequential
     // per-tile driver loop): broadcast range-tag + dynamic-partition-
     // overwrite, one sorted fragment per worklist directory. The
@@ -206,7 +196,6 @@ object IngestionPipeline {
     // cached plans under the table roots, and a post-write count would
     // recompute the probe chain from files
     val nAdmitted = admittedIds.count()
-    lap("nAdmitted")
     // The store and index chains — bulk tiled write, then the plan-scoped
     // incremental `_metadata` summary (K2 composed in: only this run's
     // fragments get their footers read; unchanged tiles' row groups are
@@ -222,21 +211,12 @@ object IngestionPipeline {
       BulkWriter.writeTiles(spark, frame, "doc_id", work, dir)
       if (work.nonEmpty) MetadataSink.writeMetadata(dir, newPlan, work, conf): Unit
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val chains = Seq(tDir -> allAdmitted, iDir -> allIdx).map {
-        case (dir, frame) => pool.submit(new Runnable {
-          def run(): Unit = tableChain(frame, dir) })
-      }
-      // unwrap so a chain failure surfaces as itself (and aborts before
-      // the commit point, exactly as the sequential form did)
-      chains.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-    lap("writeBoth")
+    // a chain failure surfaces as itself, aborting before the commit
+    // point, and only after the sibling chain has stopped writing
+    graft.Parallel.all(spark.sparkContext, 2)(
+      Seq(tDir -> allAdmitted, iDir -> allIdx).map {
+        case (dir, frame) => () => tableChain(frame, dir)
+      })
 
     // THE commit point — everything above is redoable, nothing below
     val wm = Watermark(Subgraph, Table, nowMillis, 0L, latestDocId)

@@ -143,18 +143,24 @@ object Dedup {
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands,
       maxPartners: Int = DefaultMaxPartners): DataFrame = {
-    val b = bands(sigs, numHashes, numBands)
     // the groupBy replaces the former distinct() — same shuffle, but the
     // shared-band count doubles as the cap's partner-ranking weight
-    val weighted = b.as("a").join(b.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val weighted = bandCollisions(bands(sigs, numHashes, numBands))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
     capPairs(weighted, "n_shared_bands", maxPartners)
       .select("doc_a", "doc_b")
   }
+
+  /** Band-table self-join aliased `a`/`b`: every (a, b) doc pair with
+    * a.doc_id < b.doc_id that shares a (band_id, band_val) bucket, once
+    * per shared band.
+    */
+  private def bandCollisions(b: DataFrame): DataFrame =
+    b.as("a").join(b.as("b"),
+      col("a.band_id") === col("b.band_id") &&
+        col("a.band_val") === col("b.band_val") &&
+        col("a.doc_id") < col("b.doc_id"))
 
   private val candidatePairsDuckCte: String =
     """pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -245,13 +251,8 @@ object Dedup {
           col("max_bucket"), col("cand_pairs"))
     val mh = leg("minhash_lsh", bands(signatures(spark, d)),
       Seq("band_id", "band_val"), DefaultNumBands)
-    val canonBands = exactCollapse(spark, d)
-      .where(col("doc_id") === col("gid"))
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.simhash64_bands(col("text")).as("sbands"))
-      .where(col("sbands").isNotNull)
-      .select(col("doc_id"),
-        posexplode(col("sbands")).as(Seq("band_id", "band_val")))
+    val canonBands = simhash64Bands(
+      simhash64Sigs(canonicalReps(exactCollapse(spark, d))), "narrow")
     val sh = leg("simhash64_narrow", canonBands, Seq("band_id", "band_val"), 4)
     val (bucketExpr, _) = Similarity.bucketExprFor(spark, d)
     val emb = leg("embedding_lsh",
@@ -375,6 +376,96 @@ object Dedup {
     */
   val IncrementalLshThresholdE4 = 8000L
 
+  /** The canonical-level funnel triple every pair-verifying face
+    * shares: (membership (doc_id, gid, text), eligible gids, canonical
+    * pair frame (ga, gb, <metric cols>)).
+    */
+  private[operators] type Funnel = (DataFrame, DataFrame, DataFrame)
+
+  /** Fill several persisted frames' caches with ONE action: the union of
+    * their single-column projections scans (and therefore computes) every
+    * frame's partitions inside a single job, instead of one sequential
+    * count() job per frame — the branches run in parallel and the driver
+    * pays one job round trip. A shared upstream cache (e.g. the
+    * exactCollapse membership both sets and sigs scan) fills exactly once:
+    * BlockManager's per-partition compute lock dedupes concurrent fills.
+    * Caching materializes full InMemoryRelation batches whichever column
+    * the probe reads, so the lit(1) projection fills the whole cache,
+    * same as count().
+    */
+  private[graft] def fillCaches(dfs: DataFrame*): Unit = {
+    dfs.map(_.select(lit(1L).as("one"))).reduce(_.unionAll(_)).count(): Unit
+  }
+
+  /** ONE canonical-level (collapsed) candidate→verify funnel behind
+    * every pair-verifying face. `membership` is a persisted
+    * (doc_id, gid, text) exact-duplicate collapse — [[exactCollapse]],
+    * or the raw-text one of [[editDistFunnel]] — and everything pairwise
+    * runs over its canonical reps (`doc_id = gid`) only; faces expand
+    * back to members with [[expandMemberPairs]] or count member pairs
+    * algebraically with [[pairCountsByKey]]. Each face passes only what
+    * differs:
+    *  - `signatures`: the reps' signature frames, each (doc_id, …) with
+    *    signature-less reps dropped. A canonical is ELIGIBLE (its group
+    *    yields identical-content intra pairs) iff it is in every frame.
+    *  - `band`: the first frame → candidate pairs (doc_a < doc_b).
+    *  - `score`: (candidates, frames) → (ga, gb, <metric cols>).
+    *
+    * Materialize before consume: the signature frames and the scored
+    * frame are persisted, and ONE [[fillCaches]] job fills them — and,
+    * through their full scans of it, the membership — before any
+    * consumer runs. Membership fans out to ~8 plan
+    * branches (recomputed per branch when unmaterialized — measured 20×
+    * on the 10× replica), and codegen re-evaluates an unmaterialized
+    * projection at its point of use — once per EXPANDED row after a
+    * row-multiplying join — so the scored frame pins one metric
+    * evaluation per CANONICAL pair (the round-9 editdist lesson: 1.2M
+    * DP evaluations instead of 12k, 95 s vs 3 s on the 10× replica).
+    * One fill job serves the whole funnel: the scored branch computes
+    * the signature and membership caches on the way up under the
+    * block-manager locks, and the other branches read those blocks.
+    * Membership is not a branch of its own: a scanned cache is its own
+    * AQE stage, and the extra branch cost one more job per face.
+    */
+  private def funnel(membership: DataFrame,
+      signatures: DataFrame => Seq[DataFrame],
+      band: DataFrame => DataFrame)(
+      score: (DataFrame, Seq[DataFrame]) => DataFrame): Funnel = {
+    val frames = signatures(canonicalReps(membership)).map(_.persist())
+    val gd = score(band(frames.head), frames).persist()
+    fillCaches(frames :+ gd: _*)
+    val elig = frames.map(_.select(col("doc_id").as("gid")))
+      .reduce(_.join(_, Seq("gid"), "left_semi"))
+    (membership, elig, gd)
+  }
+
+  /** The canonical reps (doc_id, text) of a collapse membership. */
+  private def canonicalReps(membership: DataFrame): DataFrame =
+    membership.where(col("doc_id") === col("gid"))
+      .select(col("doc_id"), col("text"))
+
+  /** (doc_id, sset) distinct-shingle sets of docs that have shingles. */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
+      .where(col("sset").isNotNull)
+
+  /** The MinHash family's signature frames — (signatures, shingle
+    * sets) — banded by [[candidatePairs]] on the signatures.
+    */
+  private def minhashFrames(numHashes: Int)(reps: DataFrame): Seq[DataFrame] =
+    Seq(signaturesOver(reps, numHashes), shingleSets(reps))
+
+  /** Attach `frame`'s column `c` to both endpoints of a (doc_a, doc_b)
+    * pair frame as `<as>_a` / `<as>_b` — the id-keyed lookup joins every
+    * verify score runs.
+    */
+  private def joinSides(pairs: DataFrame, frame: DataFrame, c: String,
+      as: String): DataFrame =
+    pairs
+      .join(frame.select(col("doc_id").as("doc_a"), col(c).as(s"${as}_a")), "doc_a")
+      .join(frame.select(col("doc_id").as("doc_b"), col(c).as(s"${as}_b")), "doc_b")
+
   /** INCREMENTAL NEAR-dup admission — the LSH face of
     * [[dedupIncremental]] and the production ingestion mode: each NEW
     * document (odd ids, standing in for the incoming batch) is scored
@@ -396,94 +487,19 @@ object Dedup {
     * so member-level collision ⟺ canonical collision), sourced from a
     * text-partitioned window instead of the hash kernel.
     */
-  /** ONE canonical-level (collapsed) candidate funnel shared by every
-    * pair-verifying operator: [[exactCollapse]], per-canonical shingle
-    * sets and MinHash signatures (persisted + forced), the set-bearing
-    * LSH candidate pairs, and the eligible gids (canonicals that band
-    * AND carry a shingle set). `score` attaches the operator's pair
-    * metric from the shared (candidates, sets, sigs) frames and must
-    * emit (ga, gb, <metric cols>); the scored frame is persisted AND
-    * counted before any expansion join so the kernel evaluates once per
-    * CANONICAL pair (codegen re-evaluates unmaterialized projections at
-    * their point of use — once per EXPANDED row after a row-multiplying
-    * join; the round-9 editdist lesson). A single definition so the
-    * Jaccard and signature-estimate faces can never drift in candidacy
-    * semantics (the r9 advice item).
-    */
-  /** Fill several persisted frames' caches with ONE action: the union of
-    * their single-column projections scans (and therefore computes) every
-    * frame's partitions inside a single job, instead of one sequential
-    * count() job per frame — the branches run in parallel and the driver
-    * pays one job round trip. A shared upstream cache (e.g. the
-    * exactCollapse membership both sets and sigs scan) fills exactly once:
-    * BlockManager's per-partition compute lock dedupes concurrent fills.
-    * Caching materializes full InMemoryRelation batches whichever column
-    * the probe reads, so the lit(1) projection fills the whole cache,
-    * same as count().
-    */
-  private[graft] def fillCaches(dfs: DataFrame*): Unit = {
-    dfs.map(_.select(lit(1L).as("one"))).reduce(_.unionAll(_)).count(): Unit
-  }
-
-  private def collapsedFunnel(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int)(
-      score: (DataFrame, DataFrame, DataFrame) => DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val membership = exactCollapse(spark, d)
-    val reps = membership.where(col("doc_id") === col("gid"))
-      .select(col("doc_id"), col("text"))
-    val sets = reps
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
-      .where(col("sset").isNotNull)
-      .persist()
-    val sigs = signaturesOver(reps, numHashes).persist()
-    // candidacy = both endpoints band AND carry a shingle set; the semi
-    // joins enforce it once for every score function
-    val cand = candidatePairs(sigs, numHashes, numBands)
-      .join(sets.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(sets.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-    val gd = score(cand, sets, sigs).persist()
-    // one fused fill job for the WHOLE funnel: the gd branch's
-    // computation fills sets/sigs (and, through their shared scan, the
-    // membership cache) on the way up under the block-manager locks —
-    // was fillCaches(sets, sigs) + a separate gd.count() (two jobs)
-    fillCaches(sets, sigs, gd)
-    val elig = sets.select(col("doc_id").as("gid"))
-      .join(sigs.select(col("doc_id").as("gid")), Seq("gid"), "left_semi")
-    (membership, elig, gd)
-  }
-
-  /** Canonical-level funnel with EXACT Jaccard per candidate pair —
-    * the [[minhashCollapsedPairs]] sibling for composers that verify
-    * rather than estimate: (membership, eligible gids, (ga, gb, j)
-    * pairs, persisted and forced).
-    */
-  private[operators] def jaccardCollapsedPairs(spark: SparkSession, d: String,
-      numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): (DataFrame, DataFrame, DataFrame) =
-    collapsedFunnel(spark, d, numHashes, numBands) { (cand, sets, _) =>
-      cand
-        .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), "doc_b")
-        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
-          graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
-            .as("j"))
-    }
-
   def dedupIncrementalLsh(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands,
       thresholdE4: Long = IncrementalLshThresholdE4): DataFrame = {
-    val (membership, _, pj) = jaccardCollapsedPairs(spark, d, numHashes, numBands)
+    val (membership, _, pj) = ngramJaccardFunnel(spark, d, numHashes, numBands)
     val groupReg = membership.where(col("doc_id") % 2 === 0)
       .select(col("gid")).distinct().withColumn("has_reg", lit(true))
-    val dir = pj
-      .unionByName(pj.select(col("gb").as("ga"), col("ga").as("gb"), col("j")))
+    val dir = pj.unionByName(
+      pj.select(col("gb").as("ga"), col("ga").as("gb"), col("jaccard_e4")))
     val crossBest = dir
       .join(groupReg.select(col("gid").as("gb")), Seq("gb"), "left_semi")
       .groupBy("ga")
-      .agg(max("j").as("best_cross"), countDistinct("gb").as("n_cross"))
+      .agg(max("jaccard_e4").as("best_cross"), countDistinct("gb").as("n_cross"))
     membership.where(col("doc_id") % 2 === 1)
       .select("doc_id", "gid")
       .join(groupReg, Seq("gid"), "left")
@@ -846,9 +862,6 @@ object Dedup {
        |  GROUP BY sha256(array_to_string($tokensDuck, ' ')))
        |ORDER BY doc_id""".stripMargin
 
-  /** MinHash + LSH banding: candidate near-dup pairs with the estimated
-    * Jaccard (fraction of agreeing minhashes, scaled 1e4).
-    */
   /** MinHash-LSH near-dup detection, DEFAULT (scale-safe) face: the
     * member-pair census by signature-agreement estimate — for each of
     * the ≤ numHashes+1 possible estimate values, how many member pairs
@@ -863,12 +876,10 @@ object Dedup {
     */
   def dedupMinhashLsh(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): DataFrame = {
-    val (membership, elig, gd) = minhashCollapsedPairs(spark, d, numHashes, numBands)
-    pairCountsByKey(membership, elig, gd, Seq("est_jaccard_e4"),
+      numBands: Int = DefaultNumBands): DataFrame =
+    pairCountsByKey(minhashFunnel(spark, d, numHashes, numBands),
       Seq("est_jaccard_e4" -> lit(10000L)))
       .orderBy("est_jaccard_e4")
-  }
 
   /** AUDIT face: the expanded member-level pair dump (doc_a, doc_b,
     * est_jaccard_e4). Output volume is pair-expansion-bound under mass
@@ -877,17 +888,17 @@ object Dedup {
     */
   def dedupMinhashLshPairs(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): DataFrame = {
-    val (membership, elig, gd) = minhashCollapsedPairs(spark, d, numHashes, numBands)
-    expandMemberPairs(membership, elig, gd, Seq("est_jaccard_e4"),
+      numBands: Int = DefaultNumBands): DataFrame =
+    expandMemberPairs(minhashFunnel(spark, d, numHashes, numBands),
       // identical content: identical signatures, full agreement
       Seq("est_jaccard_e4" -> lit(10000L)))
-  }
 
   /** The collapsed funnel scored with the signature-agreement estimate:
     * exact-dup membership (doc_id, gid, text), the eligible gids, and
     * the canonical-level candidate pairs with est_jaccard_e4, persisted
-    * and forced.
+    * and forced. Candidacy needs a shingle set on both endpoints, as
+    * for the set-verifying faces; the semi joins enforce it without
+    * fetching the sets.
     *
     * For composers (e.g. [[Similarity.crossmodalAudit]]) that must
     * attach their own per-GROUP payloads before pairs explode back to
@@ -896,13 +907,15 @@ object Dedup {
     * CrossmodalCollapseSpec pins the equivalence through the composed
     * query.
     */
-  private[operators] def minhashCollapsedPairs(spark: SparkSession, d: String,
+  private[operators] def minhashFunnel(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): (DataFrame, DataFrame, DataFrame) =
-    collapsedFunnel(spark, d, numHashes, numBands) { (cand, _, sigs) =>
-      cand
-        .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
+      numBands: Int = DefaultNumBands): Funnel =
+    funnel(exactCollapse(spark, d), minhashFrames(numHashes),
+        candidatePairs(_, numHashes, numBands)) { case (cand, Seq(sigs, sets)) =>
+      val withSets = cand
+        .join(sets.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+        .join(sets.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+      joinSides(withSets, sigs, "sig", "sig")
         .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
           expr(sigAgreementExpr(numHashes)).as("est_jaccard_e4"))
     }
@@ -964,37 +977,6 @@ object Dedup {
        |SELECT doc_id, simhash, count(*) OVER (PARTITION BY simhash) AS n_same_simhash
        |FROM s ORDER BY doc_id""".stripMargin
 
-  /** 64-bit SimHash near-dup pairs with Hamming banding (Manku et al.,
-    * WWW'07 — the production form; the 16-bit query above is its
-    * exact-signature toy sibling). Candidates = pairs agreeing on ANY of
-    * the 4×16-bit bands (by pigeonhole, every pair within Hamming
-    * distance 3 shares at least one band — banding has perfect recall
-    * for d ≤ 3); verify = exact Hamming distance over the full
-    * signature, bit_count(xor) per band summed.
-    *
-    * Scale shape: signatures are one map-side projection; only 4 short
-    * (doc, band_id, band_val) rows per doc shuffle into the band
-    * equi-self-join (same funnel as MinHash-LSH); the Hamming verify
-    * runs on candidates only. Bit arithmetic is engine-exact, and band
-    * values are 16-bit so no sign-bit handling is ever needed.
-    *
-    * Scale knob (measured in the 10× replica experiment, BUILDER_NOTES):
-    * candidate volume is Σ_buckets C(pop, 2) with pop ≈ n/2^16 per band,
-    * so 16-bit bands stop being selective past ~10^6 docs. The
-    * production form (Manku §3) splits the fingerprint into MORE pieces
-    * and keys tables by piece COMBINATIONS — e.g. 6 pieces, 15
-    * pair-keyed tables of ~21 bits, still perfect recall for d ≤ 3 by
-    * pigeonhole — same two plan shapes (band explode + equi-join), just
-    * a different band-key generator; and near-dup banding runs AFTER
-    * exact dedup, which removes the identical-copy mass that makes
-    * buckets quadratic.
-    */
-  /** The collapsed simhash64 funnel: exact-dup membership, eligible
-    * gids (canonicals carrying a fingerprint), and the canonical-level
-    * banded candidate pairs with exact Hamming distance and the
-    * detection flag — the shared front half of the counts and pairs
-    * faces.
-    */
   /** The Manku (WWW'07 §3) piece layout: 6 pieces over the 64-bit
     * fingerprint — 4×11 + 2×10 bits — keyed by piece PAIRS into
     * C(6,2) = 15 tables of 21–22-bit keys. Any pair within Hamming 3
@@ -1042,89 +1024,107 @@ object Dedup {
   private val duckShr: (String, Int) => String =
     (e, n) => s"($e >> $n)"
 
-  private def simhash64CollapsedPairs(spark: SparkSession, d: String,
-      bandMode: String, maxHamming: Int, flagName: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    // same exact-collapse composition as [[collapsedPairVerify]], over
-    // the simhash signature family: identical token content gives an
-    // identical 64-bit fingerprint, so member pairs band exactly when
-    // their canonicals do, with equal Hamming distance (0 in-group)
-    val membership = exactCollapse(spark, d)
-    val sigs = membership.where(col("doc_id") === col("gid"))
-      .select(col("doc_id"),
+  /** (doc_id, sbands) 64-bit fingerprints, as 4×16-bit band values, of
+    * docs that have tokens.
+    */
+  private def simhash64Sigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
         graft.functions.GraftFunctions.simhash64_bands(col("text")).as("sbands"))
       .where(col("sbands").isNotNull)
-      .persist()
-    // the banding S-curve knob production turns as the corpus grows:
-    // narrow 4×16 guarantees detection at Hamming ≤ 3; wide 2×32 only
-    // ≤ 1 but cuts bucket collisions quadratically; manku 15×~21-bit
-    // pair-keys keep the ≤ 3 guarantee AND the selectivity
-    val bands = bandMode match {
-      case "wide" => sigs.select(col("doc_id"), posexplode(expr(
-          "array(sbands[0] * 65536L + sbands[1], sbands[2] * 65536L + sbands[3])"))
-          .as(Seq("band_id", "band_val")))
-      case "manku" => sigs.select(col("doc_id"), posexplode(expr(
-          mankuKeyExprs(j => s"sbands[$j]", sparkShr)
-            .mkString("array(", ", ", ")")))
-          .as(Seq("band_id", "band_val")))
-      case "narrow" => sigs.select(col("doc_id"),
-        posexplode(col("sbands")).as(Seq("band_id", "band_val")))
+
+  /** (doc_id, band_id, band_val) rows of a fingerprint frame under a
+    * banding mode — the S-curve knob production turns as the corpus
+    * grows: narrow 4×16 guarantees detection at Hamming ≤ 3; wide 2×32
+    * only ≤ 1 but cuts bucket collisions quadratically; manku
+    * 15×~21-bit pair-keys keep the ≤ 3 guarantee AND the selectivity.
+    */
+  private def simhash64Bands(sigs: DataFrame, bandMode: String): DataFrame = {
+    val keys = bandMode match {
+      case "wide" =>
+        expr("array(sbands[0] * 65536L + sbands[1], sbands[2] * 65536L + sbands[3])")
+      case "manku" =>
+        expr(mankuKeyExprs(j => s"sbands[$j]", sparkShr).mkString("array(", ", ", ")"))
+      case "narrow" => col("sbands")
       case other => throw new IllegalArgumentException(s"band mode: $other")
     }
-    val pairs = bands.as("a").join(bands.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val hamming = (0 until 4)
-      .map(j => bit_count(col("sbands_a").getItem(j)
-        .bitwiseXOR(col("sbands_b").getItem(j))))
-      .reduce(_ + _).cast(LongType)
-    val gd = pairs
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sbands").as("sbands_a")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sbands").as("sbands_b")), "doc_b")
-      .select(col("doc_a").as("ga"), col("doc_b").as("gb"), hamming.as("hamming"))
-      .withColumn(flagName, col("hamming") <= maxHamming)
-      .persist()
-    // one fused fill job: gd's computation fills sigs (and, through its
-    // scan, the membership cache) on the way up — was a sigs.count()
-    // plus a separate gd.count() (two jobs)
-    fillCaches(sigs, gd)
-    val elig = sigs.select(col("doc_id").as("gid"))
-    (membership, elig, gd)
+    sigs.select(col("doc_id"), posexplode(keys).as(Seq("band_id", "band_val")))
   }
 
-  private def simhash64Banded(spark: SparkSession, d: String,
-      bandMode: String, maxHamming: Int, flagName: String): DataFrame = {
-    val (membership, elig, gd) =
-      simhash64CollapsedPairs(spark, d, bandMode, maxHamming, flagName)
-    expandMemberPairs(membership, elig, gd, Seq("hamming", flagName),
-      // identical content: identical fingerprints, Hamming 0
-      Seq("hamming" -> lit(0L), flagName -> lit(true)))
-  }
-
-  /** 64-bit SimHash near-dup detection, DEFAULT (scale-safe) face: the
-    * member-pair census by exact Hamming distance — for each distance
-    * the banding surfaces, how many member pairs and how many distinct
-    * documents. Bounded at 65 rows (Hamming 0..64) regardless of
-    * duplication mass; the r9 100× replica spent 1271 s materializing
-    * this query's expanded pair dump, which is now the explicit audit
-    * face [[dedupSimhash64Pairs]] (`q_dedup_simhash64_pairs`).
+  /** The collapsed simhash64 funnel: exact-dup membership, eligible
+    * gids (canonicals carrying a fingerprint), and the canonical-level
+    * banded candidate pairs with exact Hamming distance and the
+    * detection flag — the shared front half of every simhash64 face.
+    * Identical token content gives an identical 64-bit fingerprint, so
+    * member pairs band exactly when their canonicals do, with equal
+    * Hamming distance (0 in-group).
     */
-  def dedupSimhash64(spark: SparkSession, d: String, maxHamming: Int = 3): DataFrame = {
-    val (membership, elig, gd) =
-      simhash64CollapsedPairs(spark, d, "narrow", maxHamming, "within_3")
-    pairCountsByKey(membership, elig, gd, Seq("hamming", "within_3"),
-      Seq("hamming" -> lit(0L), "within_3" -> lit(true)))
-      .orderBy("hamming")
+  private def simhash64Funnel(spark: SparkSession, d: String,
+      bandMode: String, maxHamming: Int, flagName: String): Funnel = {
+    val band = { (sigs: DataFrame) =>
+      bandCollisions(simhash64Bands(sigs, bandMode))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+    }
+    funnel(exactCollapse(spark, d), reps => Seq(simhash64Sigs(reps)), band) {
+      (cand, frames) =>
+        val hamming = (0 until 4)
+          .map(j => bit_count(col("sbands_a").getItem(j)
+            .bitwiseXOR(col("sbands_b").getItem(j))))
+          .reduce(_ + _).cast(LongType)
+        joinSides(cand, frames.head, "sbands", "sbands")
+          .select(col("doc_a").as("ga"), col("doc_b").as("gb"), hamming.as("hamming"))
+          .withColumn(flagName, col("hamming") <= maxHamming)
+    }
   }
+
+  // identical content: identical fingerprints, Hamming 0
+  private def simhash64Intra(flagName: String): Seq[(String, Column)] =
+    Seq("hamming" -> lit(0L), flagName -> lit(true))
+
+  /** 64-bit SimHash near-dup pairs with Hamming banding (Manku et al.,
+    * WWW'07 — the production form; the 16-bit query above is its
+    * exact-signature toy sibling). Candidates = pairs agreeing on ANY of
+    * the 4×16-bit bands (by pigeonhole, every pair within Hamming
+    * distance 3 shares at least one band — banding has perfect recall
+    * for d ≤ 3); verify = exact Hamming distance over the full
+    * signature, bit_count(xor) per band summed.
+    *
+    * Scale shape: signatures are one map-side projection; only 4 short
+    * (doc, band_id, band_val) rows per doc shuffle into the band
+    * equi-self-join (same funnel as MinHash-LSH); the Hamming verify
+    * runs on candidates only. Bit arithmetic is engine-exact, and band
+    * values are 16-bit so no sign-bit handling is ever needed.
+    *
+    * Scale knob (measured in the 10× replica experiment, BUILDER_NOTES):
+    * candidate volume is Σ_buckets C(pop, 2) with pop ≈ n/2^16 per band,
+    * so 16-bit bands stop being selective past ~10^6 docs. The
+    * production form (Manku §3) splits the fingerprint into MORE pieces
+    * and keys tables by piece COMBINATIONS — e.g. 6 pieces, 15
+    * pair-keyed tables of ~21 bits, still perfect recall for d ≤ 3 by
+    * pigeonhole — same two plan shapes (band explode + equi-join), just
+    * a different band-key generator; and near-dup banding runs AFTER
+    * exact dedup, which removes the identical-copy mass that makes
+    * buckets quadratic.
+    *
+    * This DEFAULT (scale-safe) face is the member-pair census by exact
+    * Hamming distance — for each distance the banding surfaces, how
+    * many member pairs and how many distinct documents. Bounded at 65
+    * rows (Hamming 0..64) regardless of duplication mass; the r9 100×
+    * replica spent 1271 s materializing this query's expanded pair
+    * dump, which is now the explicit audit face [[dedupSimhash64Pairs]]
+    * (`q_dedup_simhash64_pairs`).
+    */
+  def dedupSimhash64(spark: SparkSession, d: String, maxHamming: Int = 3): DataFrame =
+    pairCountsByKey(simhash64Funnel(spark, d, "narrow", maxHamming, "within_3"),
+      simhash64Intra("within_3"))
+      .orderBy("hamming")
 
   /** AUDIT face: the expanded member-level pair dump
     * (doc_a, doc_b, hamming, within_3) of the 4×16-band funnel. */
   def dedupSimhash64Pairs(spark: SparkSession, d: String,
       maxHamming: Int = 3): DataFrame =
-    simhash64Banded(spark, d, "narrow", maxHamming, "within_3")
+    expandMemberPairs(simhash64Funnel(spark, d, "narrow", maxHamming, "within_3"),
+      simhash64Intra("within_3"))
 
   /** The PRODUCTION banding (Manku §3, [[MankuPieceBounds]]): same
     * detection guarantee as the narrow face (Hamming ≤ 3), vastly more
@@ -1134,13 +1134,10 @@ object Dedup {
     * is caught by both (pinned in SimhashBandingSpec).
     */
   def dedupSimhash64Manku(spark: SparkSession, d: String,
-      maxHamming: Int = 3): DataFrame = {
-    val (membership, elig, gd) =
-      simhash64CollapsedPairs(spark, d, "manku", maxHamming, "within_3")
-    pairCountsByKey(membership, elig, gd, Seq("hamming", "within_3"),
-      Seq("hamming" -> lit(0L), "within_3" -> lit(true)))
+      maxHamming: Int = 3): DataFrame =
+    pairCountsByKey(simhash64Funnel(spark, d, "manku", maxHamming, "within_3"),
+      simhash64Intra("within_3"))
       .orderBy("hamming")
-  }
 
   /** Corpus-size-driven banding default — the "production widens its
     * bands with scale" note made executable. 16-bit buckets hold
@@ -1162,7 +1159,8 @@ object Dedup {
     * precision/recall/cost trade empirically instead of by argument.
     */
   def dedupSimhash64Wide(spark: SparkSession, d: String): DataFrame =
-    simhash64Banded(spark, d, "wide", maxHamming = 1, "within_1")
+    expandMemberPairs(simhash64Funnel(spark, d, "wide", maxHamming = 1, "within_1"),
+      simhash64Intra("within_1"))
 
   /** The wide face's CENSUS twin — standing rule 1 applied to the last
     * simhash face that shipped as a raw dump: [[dedupSimhash64Wide]]'s
@@ -1173,18 +1171,14 @@ object Dedup {
     * dump joins `Sweep.ExpansionBound` and THIS face is what replica
     * scale measures: identical funnel, counts instead of rows.
     */
-  def dedupSimhash64WideCensus(spark: SparkSession, d: String): DataFrame = {
-    val (membership, elig, gd) =
-      simhash64CollapsedPairs(spark, d, "wide", maxHamming = 1, "within_1")
-    pairCountsByKey(membership, elig, gd, Seq("hamming", "within_1"),
-      Seq("hamming" -> lit(0L), "within_1" -> lit(true)))
+  def dedupSimhash64WideCensus(spark: SparkSession, d: String): DataFrame =
+    pairCountsByKey(simhash64Funnel(spark, d, "wide", maxHamming = 1, "within_1"),
+      simhash64Intra("within_1"))
       .orderBy("hamming")
-  }
 
   /** Shared DuckDB fingerprint prelude (t → v → bits → sig) of every
     * simhash64 oracle; the faces differ only in their `bands` CTE.
-    */
-  /** `p` prefixes every CTE name so the chain can coexist with the
+    * `p` prefixes every CTE name so the chain can coexist with the
     * MinHash CTEs (which also define a `t`) in one statement.
     */
   private def simhash64SigDuckCtes(src: String = "documents",
@@ -1275,28 +1269,16 @@ object Dedup {
       "within_3")
   }
 
-  /** The shared candidate→verify input: persisted shingle-set and
-    * signature frames plus the LSH candidate pairs joined with BOTH
-    * sides' sets — every verify-stage operator (Jaccard, containment,
-    * clusters, star contraction) consumes exactly this frame, so its
-    * shape lives in one place. Callers own the caches' release.
+  /** The cluster capstones' candidate→verify input over canonical reps:
+    * persisted shingle-set and signature frames plus the LSH candidate
+    * pairs joined with BOTH sides' sets. Callers own the caches'
+    * release.
     */
-  private def candidatePairSets(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int): (DataFrame, DataFrame, DataFrame) =
-    candidatePairSetsOver(Tables.documents(spark, d), numHashes, numBands)
-
-  private def candidatePairSetsOver(docs: DataFrame,
+  private def candidatePairSets(reps: DataFrame,
       numHashes: Int, numBands: Int): (DataFrame, DataFrame, DataFrame) = {
-    val sets = docs
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
-      .where(col("sset").isNotNull)
-      .persist()
-    val sigs = signaturesOver(docs, numHashes).persist()
-    val joined = candidatePairs(sigs, numHashes, numBands)
-      .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), "doc_b")
-    (sets, sigs, joined)
+    val sets = shingleSets(reps).persist()
+    val sigs = signaturesOver(reps, numHashes).persist()
+    (sets, sigs, joinSides(candidatePairs(sigs, numHashes, numBands), sets, "sset", "set"))
   }
 
   /** Exact-duplicate COLLAPSE prelude for the cluster capstones — the
@@ -1352,8 +1334,9 @@ object Dedup {
   }
 
   /** Member-pair CENSUS over a collapsed funnel, counted WITHOUT
-    * expansion: for each distinct value of `keyCols` (metric columns of
-    * the canonical pair frame `gd` = (ga, gb, metrics…)), the number of
+    * expansion: for each distinct value of the `intraKeys` columns
+    * (metric columns of the canonical pair frame `gd` = (ga, gb,
+    * metrics…)), the number of
     * member pairs (`n_pairs`) and distinct member docs (`n_docs`) the
     * expanded pair list would contain. Algebraically identical to
     * expand-then-aggregate (the oracle's form), but every frame stays
@@ -1364,9 +1347,10 @@ object Dedup {
     * touches all s members. The multiplicity arithmetic is the
     * generalization of [[dedupThresholdSweep]]'s inline sweep counting.
     */
-  private[operators] def pairCountsByKey(membership: DataFrame,
-      elig: DataFrame, gd: DataFrame, keyCols: Seq[String],
+  private[operators] def pairCountsByKey(f: Funnel,
       intraKeys: Seq[(String, Column)]): DataFrame = {
+    val (membership, elig, gd) = f
+    val keyCols = intraKeys.map(_._1)
     val sz = membership.groupBy(col("gid")).agg(count(lit(1)).as("sz"))
     val keyed = gd
       .join(sz.select(col("gid").as("ga"), col("sz").as("sz_a")), "ga")
@@ -1401,26 +1385,33 @@ object Dedup {
   }
 
   /** Member-level EXPANSION of a collapsed funnel's canonical pair
-    * frame — the back half of [[collapsedPairVerify]], extracted so
-    * audit faces over a shared [[collapsedFunnel]] can reuse it:
-    * cross-group canonical pairs (ga, gb, metrics…) explode through two
-    * membership equi-joins (member pairs inherit their canonicals'
-    * metrics, reoriented doc_a < doc_b); eligible exact-dup groups
-    * self-join into intra-group pairs carrying the `intraMetrics`
-    * identical-content literals. Directional metrics swap values via
-    * `swapOnFlip` when the member pair reorients against its canonical.
+    * frame, for the audit faces: cross-group canonical pairs (ga, gb,
+    * metrics…) explode through two membership equi-joins (member pairs
+    * inherit their canonicals' metrics, reoriented doc_a < doc_b);
+    * eligible exact-dup groups self-join into intra-group pairs carrying
+    * the `intraMetrics` identical-content literals. Output is
+    * row-identical to the uncollapsed funnel — identical content gives
+    * identical signatures and band values, so member pairs are
+    * candidates exactly when their canonicals are, with equal metrics —
+    * but pair-level work no longer grows quadratically with duplication
+    * (measured on the 10× exact replica: these queries ran 8–25× slower
+    * pre-collapse; the funnel is 1×-sized after it).
+    *
+    * DIRECTIONAL metric columns (e.g. containment) name their partner
+    * in `swapOnFlip`: when the member pair reorients relative to its
+    * canonical pair (da > db), each takes its partner's value.
     */
-  private[operators] def expandMemberPairs(membership: DataFrame,
-      elig: DataFrame, gd: DataFrame, names: Seq[String],
+  private[operators] def expandMemberPairs(f: Funnel,
       intraMetrics: Seq[(String, Column)],
       swapOnFlip: Map[String, String] = Map.empty): DataFrame = {
+    val (membership, elig, gd) = f
     val mem = membership.select("doc_id", "gid")
     val cross = gd
       .join(mem.select(col("gid").as("ga"), col("doc_id").as("da")), "ga")
       .join(mem.select(col("gid").as("gb"), col("doc_id").as("db")), "gb")
       .select(least(col("da"), col("db")).as("doc_a") +:
         greatest(col("da"), col("db")).as("doc_b") +:
-        names.map { n =>
+        intraMetrics.map { case (n, _) =>
           swapOnFlip.get(n) match {
             case Some(partner) =>
               when(col("da") < col("db"), col(n)).otherwise(col(partner)).as(n)
@@ -1436,109 +1427,35 @@ object Dedup {
     cross.unionByName(intra).orderBy("doc_a", "doc_b")
   }
 
-  /** Collapsed candidate→verify funnel for PAIR-EMITTING queries — the
-    * [[exactCollapse]] composition (already standard in the cluster
-    * capstones) applied to operators whose OUTPUT is one row per
-    * candidate pair. The funnel, the set/signature joins, and the
-    * verify metric all run over one canonical per exact-duplicate
-    * group; member pairs are then reconstructed by two membership
-    * equi-joins (cross-group pairs inherit their canonicals' metric)
-    * plus a per-group self-join (intra-group pairs get the
-    * identical-content metric literals). Output is row-identical to the
-    * uncollapsed funnel — identical token content gives identical
-    * shingle sets, signatures, and band values, so member pairs are
-    * candidates exactly when their canonicals are, with equal metrics —
-    * but pair-level work no longer grows quadratically with duplication
-    * (measured on the 10× exact replica: these queries ran 8–25× slower
-    * pre-collapse; the funnel is 1×-sized after it).
-    *
-    * `metric` maps the canonical pair frame (doc_a, doc_b, set_a,
-    * set_b, sig_a, sig_b) to (doc_a, doc_b, <metric cols named as in
-    * `intraMetrics`>). The metric frame is persisted AND counted before
-    * the expansion joins: codegen evaluates unmaterialized projections
-    * at their point of use, which after a row-multiplying join means
-    * once per EXPANDED row (the round-9 editdist lesson).
-    */
-  private def collapsedPairVerify(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int,
-      metric: DataFrame => DataFrame,
-      intraMetrics: Seq[(String, Column)],
-      // DIRECTIONAL metric columns (e.g. containment): when the member
-      // pair reorients relative to its canonical pair (da > db), each
-      // key takes its partner's value. Symmetric metrics omit this.
-      swapOnFlip: Map[String, String] = Map.empty): DataFrame = {
-    val (membership, elig, gd) =
-      collapsedPairFunnel(spark, d, numHashes, numBands, metric, intraMetrics)
-    expandMemberPairs(membership, elig, gd, intraMetrics.map(_._1),
-      intraMetrics, swapOnFlip)
-  }
-
-  /** The funnel triple of [[collapsedPairVerify]] WITHOUT the member
-    * expansion — (membership, eligible groups, canonical pair frame) —
-    * for census consumers that aggregate member-level answers
-    * algebraically instead of exploding pairs ([[Curation.splitLeakage]]
-    * crossed a 1000×-replica disk by routing through the expanded
-    * dump: its ≤3-row output spilled the expansion to device-full).
-    */
-  private[operators] def collapsedPairFunnel(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int,
-      metric: DataFrame => DataFrame,
-      intraMetrics: Seq[(String, Column)])
-      : (DataFrame, DataFrame, DataFrame) = {
-    val membership = exactCollapse(spark, d)
-    val reps = membership.where(col("doc_id") === col("gid"))
-      .select(col("doc_id"), col("text"))
-    val sets = reps
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
-      .where(col("sset").isNotNull)
-      .persist()
-    val sigs = signaturesOver(reps, numHashes).persist()
-    val base = candidatePairs(sigs, numHashes, numBands)
-      .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), "doc_b")
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-    val names = intraMetrics.map(_._1)
-    val gd = metric(base)
-      .select(col("doc_a").as("ga") +: col("doc_b").as("gb") +: names.map(col): _*)
-      .persist()
-    // one fused fill job for sets + sigs + gd (+ transitively the
-    // membership cache) — was a fused sets/sigs fill PLUS a separate
-    // gd.count() (two jobs)
-    fillCaches(sets, sigs, gd)
-    // intra-group pairs exist in the raw funnel only when the doc both
-    // bands (non-null signature) and carries a shingle set — the two
-    // inner joins above; restrict groups identically
-    val elig = sets.select(col("doc_id").as("gid"))
-      .join(sigs.select(col("doc_id").as("gid")), Seq("gid"), "left_semi")
-    (membership, elig, gd)
-  }
-
   /** Exact n-gram Jaccard, verified only on the LSH candidate pairs —
     * the candidate→verify funnel that makes near-dedup tractable at
     * scale (all-pairs Jaccard is quadratic; LSH candidates are ~linear).
-    * Composed through [[collapsedPairVerify]]: identical-content pairs
-    * have Jaccard exactly 10000 without touching their sets.
+    * Expanded from [[ngramJaccardFunnel]]: identical-content pairs have
+    * Jaccard exactly 10000 without touching their sets.
     */
   def dedupNgramJaccard(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands): DataFrame =
-    collapsedPairVerify(spark, d, numHashes, numBands,
-      ngramJaccardMetric, Seq("jaccard_e4" -> lit(10000L)))
-
-  private val ngramJaccardMetric: DataFrame => DataFrame =
-    base => base.select(col("doc_a"), col("doc_b"),
-      graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
-        .as("jaccard_e4"))
+    expandMemberPairs(ngramJaccardFunnel(spark, d, numHashes, numBands),
+      Seq("jaccard_e4" -> lit(10000L)))
 
   /** The n-gram Jaccard funnel UNEXPANDED — (membership, elig,
-    * canonical pairs with jaccard_e4) for algebraic census consumers.
+    * canonical pairs with jaccard_e4) — for the census consumers that
+    * aggregate member-level answers algebraically instead of exploding
+    * pairs ([[Curation.splitLeakage]] crossed a 1000×-replica disk by
+    * routing through the expanded dump: its ≤3-row output spilled the
+    * expansion to device-full).
     */
-  private[operators] def ngramJaccardFunnel(spark: SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame) =
-    collapsedPairFunnel(spark, d, DefaultNumHashes, DefaultNumBands,
-      ngramJaccardMetric, Seq("jaccard_e4" -> lit(10000L)))
+  private[operators] def ngramJaccardFunnel(spark: SparkSession, d: String,
+      numHashes: Int = DefaultNumHashes,
+      numBands: Int = DefaultNumBands): Funnel =
+    funnel(exactCollapse(spark, d), minhashFrames(numHashes),
+        candidatePairs(_, numHashes, numBands)) { case (cand, Seq(_, sets)) =>
+      joinSides(cand, sets, "sset", "set")
+        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
+          graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
+            .as("jaccard_e4"))
+    }
 
   val dedupNgramJaccardSql: String =
     s"""WITH ${signaturesDuckCte()},
@@ -1567,8 +1484,8 @@ object Dedup {
     * rows), so the curve costs |grid| × pairs short rows — strictly
     * cheaper than re-running the funnel per threshold. Thresholds that
     * flag nothing still appear (zero row) via the grid LEFT join.
-    */
-  /** Counts-only, so it never expands: the verified canonical pairs
+    *
+    * Counts-only, so it never expands: the verified canonical pairs
     * carry their member MULTIPLICITIES instead of being exploded to
     * member pairs — a cleared canonical pair (A, B) contributes
     * |A|·|B| pairs and flags every member of both groups; an eligible
@@ -1582,17 +1499,17 @@ object Dedup {
     * cleared-pair rows that only ever got counted.
     */
   def dedupThresholdSweep(spark: SparkSession, d: String): DataFrame = {
-    val (membership, elig, pj) = jaccardCollapsedPairs(spark, d)
+    val (membership, elig, pj) = ngramJaccardFunnel(spark, d)
     val sz = membership.groupBy(col("gid")).agg(count(lit(1)).as("sz"))
     val thArr = s"array(${SweepThresholdsE4.mkString("L,")}L)"
     // cross-group contributions per grid threshold (canonical-sized ×6)
     val crossTh = pj
       .join(sz.select(col("gid").as("ga"), col("sz").as("sz_a")), "ga")
       .join(sz.select(col("gid").as("gb"), col("sz").as("sz_b")), "gb")
-      .select(col("ga"), col("gb"), col("j"),
+      .select(col("ga"), col("gb"), col("jaccard_e4"),
         (col("sz_a") * col("sz_b")).as("n_member_pairs"),
         explode(expr(thArr)).as("threshold_e4"))
-      .where(col("j") >= col("threshold_e4"))
+      .where(col("jaccard_e4") >= col("threshold_e4"))
     val crossPairs = crossTh.groupBy("threshold_e4")
       .agg(sum("n_member_pairs").as("n_cross"))
     // identical-content groups clear EVERY threshold in the grid
@@ -1637,6 +1554,26 @@ object Dedup {
        |FROM grid g LEFT JOIN p USING (threshold_e4) LEFT JOIN dd USING (threshold_e4)
        |ORDER BY g.threshold_e4""".stripMargin
 
+  /** The estimator-audit funnel at canonical level: (membership, elig,
+    * (ga, gb, est_e4, exact_e4, err_e4)) — shared by the census default
+    * and the pairs audit face.
+    */
+  private def estAuditFunnel(spark: SparkSession, d: String,
+      numHashes: Int, numBands: Int): Funnel =
+    funnel(exactCollapse(spark, d), minhashFrames(numHashes),
+        candidatePairs(_, numHashes, numBands)) { case (cand, Seq(sigs, sets)) =>
+      joinSides(joinSides(cand, sets, "sset", "set"), sigs, "sig", "sig")
+        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
+          expr(sigAgreementExpr(numHashes)).as("est_e4"),
+          graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
+            .as("exact_e4"))
+        .withColumn("err_e4", col("est_e4") - col("exact_e4"))
+    }
+
+  // identical content: all signature components agree, exact = est
+  private val estAuditIntra: Seq[(String, Column)] =
+    Seq("est_e4" -> lit(10000L), "exact_e4" -> lit(10000L), "err_e4" -> lit(0L))
+
   /** MinHash estimator-quality AUDIT: the signature-agreement estimate
     * (matching components / numHashes) beside the exact Jaccard, with
     * the signed error — the measurement that decides whether a
@@ -1659,59 +1596,27 @@ object Dedup {
     * Scale: the signature lookups join on the already-shuffled
     * candidate keys; the estimate is a 16-element zip — no corpus pass
     * beyond the exact verify it is scored against.
-    */
-  /** The estimator-audit funnel at canonical level: (membership, elig,
-    * (ga, gb, est_e4, exact_e4, err_e4)) — shared by the census default
-    * and the pairs audit face.
-    */
-  private def estAuditCollapsedPairs(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int): (DataFrame, DataFrame, DataFrame) =
-    collapsedFunnel(spark, d, numHashes, numBands) { (cand, sets, sigs) =>
-      cand
-        .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("set_a")), "doc_a")
-        .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("set_b")), "doc_b")
-        .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
-          expr(sigAgreementExpr(numHashes)).as("est_e4"),
-          graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
-            .as("exact_e4"))
-        .withColumn("err_e4", col("est_e4") - col("exact_e4"))
-    }
-
-  /** DEFAULT (scale-safe) face: the estimator-quality census — member
-    * pairs and docs per (est_e4, exact_e4, err_e4) key. The key space
-    * is bounded by DISTINCT CANONICAL pairs (both metrics are functions
-    * of content), so the output never grows with duplication mass; the
-    * per-pair dump is the audit face [[minhashEstAuditPairs]]
+    *
+    * This DEFAULT (scale-safe) face is the estimator-quality census —
+    * member pairs and docs per (est_e4, exact_e4, err_e4) key. The key
+    * space is bounded by DISTINCT CANONICAL pairs (both metrics are
+    * functions of content), so the output never grows with duplication
+    * mass; the per-pair dump is the audit face [[minhashEstAuditPairs]]
     * (`q_minhash_est_audit_pairs` — the r11 100× sweep's 68.5 s was all
     * expansion).
     */
   def minhashEstAudit(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): DataFrame = {
-    val (membership, elig, gd) =
-      estAuditCollapsedPairs(spark, d, numHashes, numBands)
-    pairCountsByKey(membership, elig, gd,
-      Seq("est_e4", "exact_e4", "err_e4"),
-      // identical content: all signature components agree, exact = est
-      Seq("est_e4" -> lit(10000L), "exact_e4" -> lit(10000L),
-        "err_e4" -> lit(0L)))
+      numBands: Int = DefaultNumBands): DataFrame =
+    pairCountsByKey(estAuditFunnel(spark, d, numHashes, numBands), estAuditIntra)
       .orderBy("est_e4", "exact_e4")
-  }
 
   /** AUDIT face: the expanded per-pair estimator dump
     * (doc_a, doc_b, est_e4, exact_e4, err_e4). */
   def minhashEstAuditPairs(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
-      numBands: Int = DefaultNumBands): DataFrame = {
-    val (membership, elig, gd) =
-      estAuditCollapsedPairs(spark, d, numHashes, numBands)
-    expandMemberPairs(membership, elig, gd,
-      Seq("est_e4", "exact_e4", "err_e4"),
-      Seq("est_e4" -> lit(10000L), "exact_e4" -> lit(10000L),
-        "err_e4" -> lit(0L)))
-  }
+      numBands: Int = DefaultNumBands): DataFrame =
+    expandMemberPairs(estAuditFunnel(spark, d, numHashes, numBands), estAuditIntra)
 
   val minhashEstAuditPairsSql: String =
     s"""WITH ${signaturesDuckCte()},
@@ -1762,20 +1667,28 @@ object Dedup {
   def dedupContainment(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands): DataFrame =
-    collapsedPairVerify(spark, d, numHashes, numBands,
-      containmentMetric, containmentIntra,
+    expandMemberPairs(containmentFunnel(spark, d, numHashes, numBands),
+      containmentIntra,
       swapOnFlip = Map("cont_a_in_b_e4" -> "cont_b_in_a_e4",
         "cont_b_in_a_e4" -> "cont_a_in_b_e4"))
 
-  private val containmentMetric: DataFrame => DataFrame =
-    base => base
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.GraftFunctions.overlap_stats(col("set_a"), col("set_b"))
-          .as("ov"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("ov[0] * 10000L div ov[1]").as("cont_a_in_b_e4"),
-        expr("ov[0] * 10000L div ov[2]").as("cont_b_in_a_e4"),
-        expr("ov[0] * 10000L div (ov[1] + ov[2] - ov[0])").as("jaccard_e4"))
+  /** The containment funnel UNEXPANDED: (membership, elig, canonical
+    * pairs with both containment directions and the Jaccard).
+    */
+  private def containmentFunnel(spark: SparkSession, d: String,
+      numHashes: Int = DefaultNumHashes,
+      numBands: Int = DefaultNumBands): Funnel =
+    funnel(exactCollapse(spark, d), minhashFrames(numHashes),
+        candidatePairs(_, numHashes, numBands)) { case (cand, Seq(_, sets)) =>
+      joinSides(cand, sets, "sset", "set")
+        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
+          graft.functions.GraftFunctions.overlap_stats(col("set_a"), col("set_b"))
+            .as("ov"))
+        .select(col("ga"), col("gb"),
+          expr("ov[0] * 10000L div ov[1]").as("cont_a_in_b_e4"),
+          expr("ov[0] * 10000L div ov[2]").as("cont_b_in_a_e4"),
+          expr("ov[0] * 10000L div (ov[1] + ov[2] - ov[0])").as("jaccard_e4"))
+    }
 
   // identical content: full mutual containment
   private val containmentIntra: Seq[(String, Column)] =
@@ -1812,12 +1725,9 @@ object Dedup {
     * member-pair output is volume, not verify work. Same contract move
     * as `q_dedup_embedding` → `q_dedup_embedding_census` (r16).
     */
-  def dedupNgramJaccardCensus(spark: SparkSession, d: String): DataFrame = {
-    val (membership, elig, gd) = ngramJaccardFunnel(spark, d)
-    pairCountsByKey(membership, elig, gd, Seq("jaccard_e4"),
-      Seq("jaccard_e4" -> lit(10000L)))
+  def dedupNgramJaccardCensus(spark: SparkSession, d: String): DataFrame =
+    pairCountsByKey(ngramJaccardFunnel(spark, d), Seq("jaccard_e4" -> lit(10000L)))
       .orderBy("jaccard_e4")
-  }
 
   /** Oracle: the naive expanded pair list, aggregated per Jaccard. */
   val dedupNgramJaccardCensusSql: String =
@@ -1843,14 +1753,12 @@ object Dedup {
     * (`q_dedup_containment`) becomes the audit face.
     */
   def dedupContainmentCensus(spark: SparkSession, d: String): DataFrame = {
-    val (membership, elig, gd) = collapsedPairFunnel(spark, d,
-      DefaultNumHashes, DefaultNumBands, containmentMetric, containmentIntra)
+    val (membership, elig, gd) = containmentFunnel(spark, d)
     val sym = gd.select(col("ga"), col("gb"),
       least(col("cont_a_in_b_e4"), col("cont_b_in_a_e4")).as("cont_lo_e4"),
       greatest(col("cont_a_in_b_e4"), col("cont_b_in_a_e4")).as("cont_hi_e4"),
       col("jaccard_e4"))
-    pairCountsByKey(membership, elig, sym,
-      Seq("cont_lo_e4", "cont_hi_e4", "jaccard_e4"),
+    pairCountsByKey((membership, elig, sym),
       Seq("cont_lo_e4" -> lit(10000L), "cont_hi_e4" -> lit(10000L),
         "jaccard_e4" -> lit(10000L)))
       .orderBy("cont_lo_e4", "cont_hi_e4", "jaccard_e4")
@@ -1896,6 +1804,44 @@ object Dedup {
     */
   val DefaultMaxEditDist = 64
 
+  /** The edit-distance funnel at canonical level: raw-text-hash
+    * membership (edit distance sees raw characters, so the collapse
+    * key is the raw sha — unlike the token-normalized funnels), the
+    * signature-bearing eligible gids (docs with no shingles never
+    * band), and (ga, gb, edit_dist, sim_e4) canonical pairs, persisted
+    * and forced.
+    */
+  private def editDistFunnel(spark: SparkSession, d: String,
+      numHashes: Int, numBands: Int, maxChars: Int, maxDist: Int): Funnel = {
+    import org.apache.spark.sql.expressions.Window
+    val membership = Tables.documents(spark, d)
+      .select(col("doc_id"), col("text"), sha2(col("text"), 256).as("rh"))
+      .withColumn("gid", min("doc_id").over(Window.partitionBy("rh")))
+      .select("doc_id", "gid", "text")
+      .persist()
+    funnel(membership, reps => Seq(signaturesOver(reps, numHashes)),
+        candidatePairs(_, numHashes, numBands)) { (cand, _) =>
+      val pfx = canonicalReps(membership)
+        .select(col("doc_id"), substring(col("text"), 1, maxChars).as("pfx"))
+      // per-canonical-pair distance: distinct content by construction, so
+      // every DP is novel work; equal prefixes (docs diverging only past
+      // maxChars) still short-circuit
+      joinSides(cand, pfx, "pfx", "pfx")
+        .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
+          when(col("pfx_a") === col("pfx_b"), 0L)
+            .otherwise(levenshtein(col("pfx_a"), col("pfx_b"), maxDist).cast(LongType))
+            .as("edit_dist"),
+          greatest(length(col("pfx_a")), length(col("pfx_b"))).as("mx"))
+        .select(col("ga"), col("gb"), col("edit_dist"),
+          expr(s"""CASE WHEN edit_dist < 0 THEN 0L
+                   WHEN mx > 0 THEN 10000L - edit_dist * 10000L div mx
+                   ELSE 10000L END""").as("sim_e4"))
+    }
+  }
+
+  // identical raw content: distance 0, full similarity
+  private val editDistIntra: Seq[(String, Column)] =
+    Seq("edit_dist" -> lit(0L), "sim_e4" -> lit(10000L))
   /** EDIT-DISTANCE verify stage: Levenshtein over the LSH candidate
     * pairs — the character-level alternative to shingle Jaccard (robust
     * to small in-place edits that shift every shingle, the RETSim-style
@@ -1927,81 +1873,22 @@ object Dedup {
     * form cost 674 s on the 100× replica (the band join itself explodes
     * ~C(R,2) per duplicated doc); collapsed, the funnel is 1×-sized and
     * only the output expansion scales with duplication.
-    */
-  /** The edit-distance funnel at canonical level: raw-text-hash
-    * membership (edit distance sees raw characters, so the collapse
-    * key is the raw sha — unlike the token-normalized funnels), the
-    * signature-bearing eligible gids, and (ga, gb, edit_dist, sim_e4)
-    * canonical pairs, persisted and forced.
-    */
-  private def editDistCollapsedPairs(spark: SparkSession, d: String,
-      numHashes: Int, numBands: Int, maxChars: Int, maxDist: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val membership = Tables.documents(spark, d)
-      .select(col("doc_id"), col("text"), sha2(col("text"), 256).as("rh"))
-      .withColumn("gid", min("doc_id").over(Window.partitionBy("rh")))
-      .select("doc_id", "gid", "text")
-      .persist()
-    val reps = membership.where(col("doc_id") === col("gid"))
-      .select(col("doc_id"), col("text"))
-    val sigs = signaturesOver(reps, numHashes).persist()
-    val pfx = reps.select(col("doc_id"), substring(col("text"), 1, maxChars).as("pfx"))
-    // per-canonical-pair distance: distinct content by construction, so
-    // every DP is novel work; equal prefixes (docs diverging only past
-    // maxChars) still short-circuit
-    val gd = candidatePairs(sigs, numHashes, numBands)
-      .join(pfx.select(col("doc_id").as("doc_a"), col("pfx").as("pfx_a")), "doc_a")
-      .join(pfx.select(col("doc_id").as("doc_b"), col("pfx").as("pfx_b")), "doc_b")
-      .select(col("doc_a").as("ga"), col("doc_b").as("gb"),
-        when(col("pfx_a") === col("pfx_b"), 0L)
-          .otherwise(levenshtein(col("pfx_a"), col("pfx_b"), maxDist).cast(LongType))
-          .as("edit_dist"),
-        greatest(length(col("pfx_a")), length(col("pfx_b"))).as("mx"))
-      .persist()
-    // ONE fused fill job for the whole funnel (was three sequential
-    // count() jobs): the gd branch's computation fills the sigs and
-    // membership caches on the way up (persisted blocks compute once
-    // under BlockManager's per-partition locks — the same discipline as
-    // collapsedFunnel's fused fill), and the membership/sigs branches
-    // of the union read those blocks. The two materialize-BEFORE-
-    // consume contracts are unchanged: membership fans out to ~8 plan
-    // branches (recomputed per branch when unmaterialized — measured
-    // 20× on the 10× replica), and the levenshtein kernel must pin one
-    // evaluation per CANONICAL pair before the expansion joins would
-    // inline it per expanded row (measured 1.2M DP evaluations instead
-    // of 12k — 95 s vs 3 s on the 10× replica). Both still materialize
-    // here, strictly before any downstream consumer runs.
-    fillCaches(membership, sigs, gd)
-    val gdSim = gd.select(col("ga"), col("gb"), col("edit_dist"),
-      expr(s"""CASE WHEN edit_dist < 0 THEN 0L
-               WHEN mx > 0 THEN 10000L - edit_dist * 10000L div mx
-               ELSE 10000L END""").as("sim_e4"))
-    // intra-group pairs exist in the raw funnel only when the group
-    // participates in banding at all (docs with no shingles never band)
-    val elig = sigs.select(col("doc_id").as("gid"))
-    (membership, elig, gdSim)
-  }
-
-  /** DEFAULT (scale-safe) face: the edit-distance census — member
-    * pairs and docs per (edit_dist, sim_e4) key, bounded by distinct
-    * canonical pairs (both are raw-content functions; intra pairs are
-    * the constant (0, 10000) key). The per-pair dump — 73 s of pure
-    * expansion at the r11 100× sweep — is the audit face
+    *
+    * This DEFAULT (scale-safe) face is the edit-distance census —
+    * member pairs and docs per (edit_dist, sim_e4) key, bounded by
+    * distinct canonical pairs (both are raw-content functions; intra
+    * pairs are the constant (0, 10000) key). The per-pair dump — 73 s of
+    * pure expansion at the r11 100× sweep — is the audit face
     * [[dedupEditDistancePairs]] (`q_dedup_editdist_pairs`).
     */
   def dedupEditDistance(spark: SparkSession, d: String,
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands,
       maxChars: Int = DefaultMaxEditChars,
-      maxDist: Int = DefaultMaxEditDist): DataFrame = {
-    val (membership, elig, gdSim) =
-      editDistCollapsedPairs(spark, d, numHashes, numBands, maxChars, maxDist)
-    pairCountsByKey(membership, elig, gdSim, Seq("edit_dist", "sim_e4"),
-      // identical raw content: distance 0, full similarity
-      Seq("edit_dist" -> lit(0L), "sim_e4" -> lit(10000L)))
+      maxDist: Int = DefaultMaxEditDist): DataFrame =
+    pairCountsByKey(
+      editDistFunnel(spark, d, numHashes, numBands, maxChars, maxDist), editDistIntra)
       .orderBy("edit_dist", "sim_e4")
-  }
 
   /** AUDIT face: the expanded per-pair dump
     * (doc_a, doc_b, edit_dist, sim_e4). */
@@ -2009,12 +1896,9 @@ object Dedup {
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands,
       maxChars: Int = DefaultMaxEditChars,
-      maxDist: Int = DefaultMaxEditDist): DataFrame = {
-    val (membership, elig, gdSim) =
-      editDistCollapsedPairs(spark, d, numHashes, numBands, maxChars, maxDist)
-    expandMemberPairs(membership, elig, gdSim, Seq("edit_dist", "sim_e4"),
-      Seq("edit_dist" -> lit(0L), "sim_e4" -> lit(10000L)))
-  }
+      maxDist: Int = DefaultMaxEditDist): DataFrame =
+    expandMemberPairs(
+      editDistFunnel(spark, d, numHashes, numBands, maxChars, maxDist), editDistIntra)
 
   val dedupEditDistancePairsSql: String =
     s"""WITH ${signaturesDuckCte()},
@@ -2084,9 +1968,8 @@ object Dedup {
     require(minJaccardE4 <= 10000L,
       s"minJaccardE4 must be <= 10000 for the exact-collapse prelude, got $minJaccardE4")
     val collapsed = exactCollapse(spark, d)
-    val repDocs = collapsed.where(col("doc_id") === col("gid"))
-      .select("doc_id", "text")
-    val (sets, sigs, joined) = candidatePairSetsOver(repDocs, numHashes, numBands)
+    val (sets, sigs, joined) =
+      candidatePairSets(canonicalReps(collapsed), numHashes, numBands)
     val verified = joined
       .where(graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
         >= minJaccardE4)
@@ -2216,9 +2099,8 @@ object Dedup {
     require(minJaccardE4 <= 10000L,
       s"minJaccardE4 must be <= 10000 for the exact-collapse prelude, got $minJaccardE4")
     val collapsed = exactCollapse(spark, d)
-    val repDocs = collapsed.where(col("doc_id") === col("gid"))
-      .select("doc_id", "text")
-    val (sets, sigs, joined) = candidatePairSetsOver(repDocs, numHashes, numBands)
+    val (sets, sigs, joined) =
+      candidatePairSets(canonicalReps(collapsed), numHashes, numBands)
     val verified = joined
       .where(graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
         >= minJaccardE4)
@@ -2353,24 +2235,6 @@ object Dedup {
        |  CAST(1000000 // sz.cluster_size AS BIGINT) AS weight_ppm
        |FROM labels l JOIN sz USING (cluster_rep) ORDER BY l.doc_id""".stripMargin
 
-  /** INCREMENTAL INGESTION capstone query: the full
-    * [[graft.extract.IngestionPipeline]] lifecycle driven through four
-    * successive runs over quartiles of the doc-id space — per-doc
-    * admission verdicts (registry probe columns + the admission bit)
-    * across all four batches. Each run extracts the docs NEW since the
-    * committed watermark, probes them against the registry built from
-    * the previously ADMITTED store, writes admitted rows to tiered
-    * partition directories (merging consolidated tiles), and commits
-    * the watermark last. The oracle replays the same four-batch
-    * chained-registry semantics as pure SQL — registry k = admitted
-    * batches 1..k-1 — so the lifecycle's verdict stream is
-    * hash-checked end-to-end, store and watermark included.
-    *
-    * Docs at or above the last run's tier coverage
-    * (`(max+1) div 16 * 16`) are not yet extracted by design —
-    * coverage advances tier-aligned, exactly as the reference's block
-    * partitioner leaves the chain tip unextracted until a tier fills.
-    */
   /** Smallest partition tier for an id space ending at `maxDoc`: the
     * least 16·4^i with maxDoc + 1 ≤ 256·tier, so a plan never exceeds
     * ~256 small-tier partitions REGARDLESS of how sparse or shifted the
@@ -2411,6 +2275,24 @@ object Dedup {
   private def freshIngestStore(prefix: String): String =
     java.nio.file.Files.createTempDirectory(ingestStoreRoot, prefix).toString
 
+  /** INCREMENTAL INGESTION capstone query: the full
+    * [[graft.extract.IngestionPipeline]] lifecycle driven through four
+    * successive runs over quartiles of the doc-id space — per-doc
+    * admission verdicts (registry probe columns + the admission bit)
+    * across all four batches. Each run extracts the docs NEW since the
+    * committed watermark, probes them against the registry built from
+    * the previously ADMITTED store, writes admitted rows to tiered
+    * partition directories (merging consolidated tiles), and commits
+    * the watermark last. The oracle replays the same four-batch
+    * chained-registry semantics as pure SQL — registry k = admitted
+    * batches 1..k-1 — so the lifecycle's verdict stream is
+    * hash-checked end-to-end, store and watermark included.
+    *
+    * Docs at or above the last run's tier coverage
+    * (`(max+1) div 16 * 16`) are not yet extracted by design —
+    * coverage advances tier-aligned, exactly as the reference's block
+    * partitioner leaves the chain tip unextracted until a tier fills.
+    */
   def ingestAdmission(spark: SparkSession, d: String): DataFrame = {
     import graft.extract.IngestionPipeline
     val dmax = Tables.documents(spark, d).agg(max("doc_id"))

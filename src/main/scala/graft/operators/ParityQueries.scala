@@ -456,10 +456,7 @@ object ParityQueries {
           lit(null).cast("long").as("block_upper"),
           col("user_id"), col("event_type"))
         .write.mode("overwrite").parquet(p(s"$schema/$table.parquet")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try writes.map(w => pool.submit(new Runnable { def run(): Unit = w() }))
-      .foreach(_.get())
-    finally pool.shutdown()
+    graft.Parallel.all(spark.sparkContext, 3)(writes)
 
     val outRoot = java.nio.file.Files.createTempDirectory("graft-k2-out").toString
     ExtractPipeline.extract(spark, new ParquetEntitySource(root),

@@ -1028,7 +1028,16 @@ object Similarity {
     */
   val DefaultCrossmodalMinCos = 300000L
 
-  /** (Semantics in the audit Scaladoc above.) Guarded group-collapse:
+  /** Shared guarded-collapse prelude of both crossmodal faces: the
+    * collapsed text funnel, each member's embedding (one LINEAR LEFT
+    * join — a doc without an embedding row is an alignment fault, not a
+    * skip), the per-group uniformity verdict, and the canonical-level
+    * cosine for every needed (ga, gb) key INCLUDING self keys (intra
+    * pairs of a uniform group score cos(v, v) through the same kernel,
+    * never an assumed literal). memberEmb and canonCos come back
+    * persisted and forced.
+    *
+    * (Semantics in the audit Scaladoc above.) Guarded group-collapse:
     * the naive shape — expand member pairs, LEFT-join embeddings twice
     * and run the cosine per pair — multiplies a ~1KB vector payload
     * join by the duplication quadratic (measured: 253 s at the 100×
@@ -1046,27 +1055,9 @@ object Similarity {
     * shape; CrossmodalCollapseSpec pins it, including a doctored
     * mixed-embedding fixture that forces the fallback.
     */
-  /** Shared guarded-collapse prelude of both crossmodal faces: the
-    * collapsed text funnel, each member's embedding (one LINEAR LEFT
-    * join — a doc without an embedding row is an alignment fault, not a
-    * skip), the per-group uniformity verdict, and the canonical-level
-    * cosine for every needed (ga, gb) key INCLUDING self keys (intra
-    * pairs of a uniform group score cos(v, v) through the same kernel,
-    * never an assumed literal). memberEmb and canonCos come back
-    * persisted and forced.
-    */
-  private[operators] def xlap(tag: String, t0: Long): Long = {
-    val t1 = System.nanoTime()
-    if (sys.env.contains("GRAFT_XMODAL_TIMING"))
-      println(f"[xmodal-timing] $tag%-16s ${(t1 - t0) / 1e9}%8.2f s")
-    t1
-  }
-
   private def crossmodalPrelude(spark: SparkSession, d: String): (
       DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    var t = System.nanoTime()
-    val (membership, elig, gd) = Dedup.minhashCollapsedPairs(spark, d)
-    t = xlap("funnel", t)
+    val (membership, elig, gd) = Dedup.minhashFunnel(spark, d)
     val mem = membership.select("doc_id", "gid")
     val emb = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     // TOUCHED-GROUP restriction: every downstream consumer of the class
@@ -1089,7 +1080,6 @@ object Similarity {
     // block-manager compute locks — the dedicated count() was one more
     // job for the same fill
     val memT = mem.join(touched, Seq("gid"), "left_semi").persist()
-    t = xlap("memT", t)
     // fetch vectors for touched members only: the semi-join prunes the
     // embeddings scan to touched ids (broadcastable id set — one
     // streamed scan, no corpus-wide payload shuffle), and the LEFT join
@@ -1125,7 +1115,6 @@ object Similarity {
     // cached membership now instead of letting it sit in the cache
     // manager until the caller's clearCache
     memT.unpersist()
-    t = xlap("cls", t)
     // LAZY checkpoint: canonCos below is the next action and materializes
     // (and severs) this group-sized frame inside its own job — the eager
     // form paid a dedicated job for the same result
@@ -1137,7 +1126,6 @@ object Similarity {
         first(when(col("has_canon"), col("embedding")), ignoreNulls = true)
           .as("rep_emb"))
       .localCheckpoint(false)
-    t = xlap("perGroup", t)
     val groupInfo = perGroup.select(col("gid"),
       (col("n_emb") === col("n_mem") && col("n_cls") === 1).as("uniform"),
       col("n_mem"))
@@ -1151,7 +1139,6 @@ object Similarity {
         when(col("emb_a").isNotNull && col("emb_b").isNotNull,
           cosE6("emb_a", "emb_b")).as("cos_can"))
       .localCheckpoint(true)
-    xlap("canonCos", t)
     (mem, elig, gd, cls.select("gid", "embedding", "csz"), groupInfo, canonCos)
   }
 
@@ -1186,7 +1173,7 @@ object Similarity {
     val (mem, elig, gd, _, groupInfo, canonCos) = crossmodalPrelude(spark, d)
     // expanded pairs, KEEPING group ids (narrow): cross-group pairs from
     // the canonical frame, intra-group pairs with the identical-content
-    // estimate literal — the collapsedPairVerify expansion, inlined so
+    // estimate literal — the Dedup.expandMemberPairs expansion, inlined so
     // ga/gb survive for the payload join
     val cross = gd
       .join(mem.select(col("gid").as("ga"), col("doc_id").as("da")), "ga")
@@ -1341,9 +1328,7 @@ object Similarity {
     // branch is empty BY CONSTRUCTION (each filters on a non-uniform
     // side), so skip planning their five-way join trees entirely. One
     // existence probe on the persisted per-group frame decides.
-    val tHF = System.nanoTime()
     val hasFault = groupInfo.where(!col("uniform")).limit(1).count() > 0
-    xlap("hasFault", tHF)
     val fastPairs = fastCross.select(kc :+ col("m"): _*)
       .unionByName(fastIntra.select(kc :+ col("m"): _*))
     val nPairs = (if (!hasFault) fastPairs
@@ -1386,11 +1371,9 @@ object Similarity {
     // the five branch caches can release here rather than accumulate
     // until clearCache. On the all-uniform fast path the slow branches
     // were never computed and their unpersist is a no-op.
-    val tC = System.nanoTime()
     val census = nPairs.join(nDocs, keys)
       .orderBy("est_jaccard_e4", "embeds_agree")
       .localCheckpoint(true)
-    xlap("census", tC)
     Seq(fastCross, fastIntra, slowCross, slowIntraSame, slowIntraDiff)
       .foreach(_.unpersist())
     census
@@ -1996,16 +1979,8 @@ object Similarity {
     // back-fills each other's stage tails (guide §2.6). Results are
     // unchanged: each fit is a deterministic pure function of the
     // corpus, and job descriptions stay thread-local.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (cents, cb) = try {
-      val fc = pool.submit(new java.util.concurrent.Callable[
-        Seq[(Long, Seq[Long])]] {
-        def call(): Seq[(Long, Seq[Long])] = fitIvfCentroids(spark, d) })
-      val fb = pool.submit(new java.util.concurrent.Callable[
-        Seq[(Int, Long, Seq[Long])]] {
-        def call(): Seq[(Int, Long, Seq[Long])] = fitPqCodebooks(spark, d) })
-      (fc.get(), fb.get())
-    } finally pool.shutdown()
+    val (cents, cb) = graft.Parallel.both(spark.sparkContext)(
+      fitIvfCentroids(spark, d), fitPqCodebooks(spark, d))
     val centArr = centroidRow(spark, cents)
     val cbRow = pqCbRow(spark, cb)
     val corpus = emb.crossJoin(broadcast(centArr)).crossJoin(broadcast(cbRow))

@@ -362,22 +362,11 @@ object Tables {
     */
   private[graft] val FloorMinRowsPerCore = 2048L
 
-  /** The trickle guard's threshold, overridable per session
-    * (`spark.graft.floorMinRowsPerCore`) — the cliff it encodes (stage
-    * launch overhead vs per-task kernel work) is hardware-dependent, so
-    * the constant is a measured DEFAULT, not a law; the knob exists so
-    * a deployment (and the calibration A/B) can move it without a
-    * rebuild.
-    */
-  private[graft] def floorMinRowsPerCore(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.floorMinRowsPerCore",
-      FloorMinRowsPerCore.toString).toLong
-
   private[graft] def computeFloorForBatch(spark: SparkSession, df: DataFrame,
       key: String, rows: Long): DataFrame = {
     if (spark.conf.get("spark.graft.computeFloor", "opt-in") == "off") return df
     val cores = spark.sparkContext.defaultParallelism
-    if (rows < cores * floorMinRowsPerCore(spark)) return df
+    if (rows < cores * FloorMinRowsPerCore) return df
     df.repartition(cores, col(key))
   }
 

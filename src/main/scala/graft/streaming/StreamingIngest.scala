@@ -125,20 +125,12 @@ object StreamingIngest {
   private def admitCached(batch: DataFrame, storeDir: String): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val timing = sys.env.contains("GRAFT_INGEST_TIMING")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (timing) {
-      val t1 = System.nanoTime()
-      println(f"[stream-timing] $tag%-18s ${(t1 - t0) / 1e9}%8.2f s")
-      t0 = t1
-    }
     // one count pass serves both the empty check and the floor's size
     // guard (an RDD-backed micro-batch has no cheaper truthful size or
     // width signal — see computeFloorForBatch); it doubles as the
     // cache fill for the wrapper's persist
     val nRows = batch.count()
     if (nRows == 0) return
-    lap("countCheck")
     // Compute-parallelism floor, streaming edition: the micro-batch
     // arrives RDD-backed with source byte-split partitioning (a
     // one-row-group drop file = one WORKING task however many splits),
@@ -149,7 +141,6 @@ object StreamingIngest {
     // sf0.1 trickle-batch A/B (graft.sources.Tables.computeFloorForBatch).
     val b = graft.sources.Tables.computeFloorForBatch(
       spark, batch, "doc_id", nRows)
-    lap("floor")
     val iDir = indexDir(storeDir)
     val haveStore = graft.sinks.Fs.exists(storeDir, conf)
     // The STORE is the source of truth; the index is a derived
@@ -192,7 +183,6 @@ object StreamingIngest {
           .write.mode("overwrite").parquet(iDir)
       validatedStores.put(sKey, Int.box(0))
     }
-    lap("healCheck")
     val oldIdx =
       if (haveStore) spark.read.parquet(iDir)
       else Dedup.registryIndexRows(b.where(lit(false))
@@ -206,13 +196,11 @@ object StreamingIngest {
       // sever the store scan feeding the registry before appending to
       // the same path (Spark refuses a write into its own read lineage)
       .localCheckpoint(true)
-    lap("probe")
     if (!admitted.isEmpty) {
       // index rows first-class like the batch pipeline: hashed exactly
       // once at admission, severed from the index scan they derive from
       val newIdx = IngestionPipeline.indexRowsFor(admitted)
         .localCheckpoint(true)
-      lap("indexRows")
       // drop the memo across the append pair (a crash in between must
       // re-validate), then RESTORE the batches-since-disk-check counter
       // — putting 0 back would reset the cadence on every append and
@@ -222,7 +210,6 @@ object StreamingIngest {
       admitted.write.mode("append").parquet(storeDir)
       newIdx.write.mode("append").parquet(iDir)
       validatedStores.put(sKey, sinceCheck)
-      lap("appends")
     }
   }
 }

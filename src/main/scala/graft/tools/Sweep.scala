@@ -46,7 +46,7 @@ object Sweep {
     // its census twin q_dedup_simhash64_wide_census is the sweep face
     "q_dedup_simhash64_wide",
     // the jaccard/containment verify dumps are member-pair output too
-    // (collapsedPairVerify → expandMemberPairs): compute is collapsed,
+    // (Dedup.funnel → expandMemberPairs): compute is collapsed,
     // output re-expands quadratically under replica duplication. Their
     // r16 1000× timeouts were output volume (both rows also carried box
     // canaries 55–89); the sweep faces are the census twins

@@ -3,6 +3,8 @@ package graft.extract
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -211,6 +213,31 @@ class IngestionPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(r.nAdmitted == 2L)
     assert(storeDocs2(dir, store) == Set(1L, 5L),
       "only the min doc id per content and the unique doc are admitted")
+    spark.catalog.clearCache()
+  }
+
+  test("a failed chain stops its sibling before ingest() throws") {
+    val store = freshStore()
+    // the store table's directory is a plain file: the store chain's
+    // write fails at job setup while the index chain is still writing
+    val tDir = Paths.get(Partitioner.tableDir(
+      store, IngestionPipeline.Subgraph, IngestionPipeline.Table))
+    Files.createDirectories(tDir.getParent)
+    Files.writeString(tDir, "not a directory")
+    intercept[Exception](
+      IngestionPipeline.ingest(spark, src, store, latestDocId = 640L))
+    def snapshot(): Map[String, (Long, Long)] = {
+      val files = Files.walk(Paths.get(store))
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis))
+        .toMap
+      finally files.close()
+    }
+    val atThrow = snapshot()
+    Thread.sleep(3000)
+    assert(snapshot() == atThrow,
+      "files under the store root changed after ingest() threw")
+    assert(!Files.exists(Paths.get(Watermark.path(store))))
     spark.catalog.clearCache()
   }
 }
