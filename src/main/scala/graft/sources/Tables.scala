@@ -45,7 +45,7 @@ object Tables {
     * footer reader a half-written file the plain Spark scan (which
     * ignores whole `_`/`.` components) never sees.
     */
-  private def dataFiles(conf: org.apache.hadoop.conf.Configuration,
+  private[graft] def dataFiles(conf: org.apache.hadoop.conf.Configuration,
       path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
