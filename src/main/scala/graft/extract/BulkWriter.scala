@@ -2,27 +2,29 @@ package graft.extract
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.plans.{Partition, Partitioner}
-import graft.sinks.Fs
+import graft.sinks.{Fs, Metrics}
 
-/** Single-job tiled parquet sink shared by [[ExtractPipeline]] and
-  * [[IngestionPipeline]]: the whole work-list of partition tiles is
-  * written by ONE distributed job instead of a sequential driver loop
-  * of per-tile jobs. Rows are range-tagged with their target tile via a
-  * broadcast join against the (driver-sized) plan; a hash repartition
-  * on the tile key puts each tile's rows in exactly one task, so the
-  * `partitionBy` writer emits the same one-sorted-fragment-per-
-  * directory layout as the loop sink (reference layout:
-  * subgraph_extractor/cli.py:189-197 — one file per partition dir).
-  * Dynamic partition overwrite replaces only the touched directories,
-  * keeping crashed re-runs idempotent.
+/** The tiled parquet sink of [[ExtractPipeline]] and [[IngestionPipeline]],
+  * and the one module that knows the tile layout: one fragment per
+  * `partition_size=/start_partition=/end_partition=` directory, sorted by
+  * the key column (reference layout: subgraph_extractor/cli.py:189-197);
+  * every work tile's directory readable with the full schema, even when
+  * the tile holds no rows (E7); rows written tallied by an `observe` on
+  * the write itself, with no extra scan.
   *
-  * At 100 TB this is the difference between thousands of serialized
-  * driver-scheduled jobs (each re-scanning its input slice) and one
-  * job whose tasks fan out across the cluster over a single scan. The
-  * largest tier bounds per-task data — tier sizing is the skew control.
+  * Two shapes write that layout, and both stay because each wins on one
+  * side of the work-list size ([[ExtractPipeline.DefaultBulkThreshold]]):
+  *  - [[writeEachTile]] runs one job per tile over that tile's own frame;
+  *  - [[writeTiles]] writes the whole work list in ONE job over one frame.
+  *    A hash repartition on the tile key puts each tile's rows in exactly
+  *    one task. Dynamic partition overwrite replaces only the touched
+  *    directories, keeping crashed re-runs idempotent. At 100 TB this is
+  *    the difference between thousands of serialized driver-scheduled
+  *    jobs (each re-scanning its input slice) and one job whose tasks fan
+  *    out across the cluster over a single scan. The largest tier bounds
+  *    per-task data — tier sizing is the skew control.
   */
 object BulkWriter {
 
@@ -30,96 +32,102 @@ object BulkWriter {
   val StartCol = "start_partition"
   val EndCol = "end_partition"
 
-  /** Range-tag: each row of `df` gains its target tile's
-    * `(partition_size, start_partition, end_partition)`. Rows covered
-    * by no work tile drop out — exactly the rows this work-list does
-    * not own.
-    *
-    * Tiles from [[Partitioner.plan]] are tier-ALIGNED
-    * (`start % size == 0`), so the owning tile is COMPUTED per row —
-    * `start = key - pmod(key, size)` per tier, accepted iff that start
-    * is in the tier's work-set (an `InSet` literal probe; work lists
-    * are driver-sized). Everything stays inside whole-stage codegen: a
-    * broadcast range-join here would plan a BroadcastNestedLoopJoin,
-    * which falls out of codegen and row-copies the full payload (text,
-    * shingle arrays) per probe — measurably brutal at replica scale.
-    * Tier precedence is widest-first, though plan disjointness means at
-    * most one tier can match. Unaligned tiles (never produced by the
-    * planner) fall back to the broadcast range-join.
+  /** Per-tile shape: tile `p` gets `frame(p)`, sorted, as its directory's
+    * only fragment (an empty frame still writes one schema-carrying
+    * fragment). Overwrite mode replaces whatever the directory held.
+    * Returns the rows written.
     */
-  def tag(spark: SparkSession, df: DataFrame, keyCol: String,
-      work: Seq[Partition]): DataFrame = {
-    val aligned = work.forall(p => p.start % p.size == 0)
-    if (aligned) {
-      val k = col(keyCol)
-      val byTier = work.groupBy(_.size).view.mapValues(_.map(_.start)).toMap
-      val cands = byTier.keys.toSeq.sorted(Ordering[Long].reverse).map { s =>
-        val st = (k - pmod(k, lit(s))).cast("long")
-        when(st.isin(byTier(s): _*), struct(lit(s).as("s"), st.as("st")))
-      }
-      df.withColumn("__tile", coalesce(cands :+ lit(null): _*)
-          .cast("struct<s:bigint,st:bigint>"))
-        .where(col("__tile").isNotNull)
-        .withColumn(SizeCol, col("__tile.s"))
-        .withColumn(StartCol, col("__tile.st"))
-        .withColumn(EndCol, col(SizeCol) + col(StartCol))
-        .drop("__tile")
-    } else {
-      import spark.implicits._
-      val plan = work.map(p => (p.size, p.start, p.end))
-        .toDF(SizeCol, StartCol, EndCol)
-      df.join(broadcast(plan),
-        col(keyCol) >= col(StartCol) && col(keyCol) < col(EndCol))
-    }
-  }
+  def writeEachTile(keyCol: String, work: Seq[Partition], tDir: String)(
+      frame: Partition => DataFrame): Long =
+    work.map { p =>
+      val dir = Partitioner.partitionDir(tDir, p)
+      counted(frame(p), dir)(_.repartition(1).sortWithinPartitions(keyCol)
+        .write.mode("overwrite").parquet(dir))
+    }.sum
 
-  /** Writes a pre-[[tag]]ged frame. The task sort MUST lead with every
-    * partitionBy column: FileFormatWriter otherwise inserts its own
-    * (unstable) sort on the partition keys and the within-fragment key
-    * order is lost (the BulkScaleSpec lesson). Tiles that end up with
-    * no rows get an explicit schema-preserving empty fragment —
-    * `partitionBy` skips empties, but the E7 contract (every planned
-    * directory readable with the full schema) must hold.
+  /** One-job shape: `df`'s rows go to the work tile whose range holds
+    * their `keyCol`; rows of no work tile drop out. The task sort MUST
+    * lead with every partitionBy column: FileFormatWriter otherwise
+    * inserts its own (unstable) sort on the partition keys and the
+    * within-fragment key order is lost (the BulkScaleSpec lesson). Tiles
+    * that end up with no rows get an explicit schema-preserving empty
+    * fragment — `partitionBy` skips empties. Returns the rows written.
     */
-  def writeTagged(spark: SparkSession, tagged: DataFrame, keyCol: String,
-      rowSchema: StructType, work: Seq[Partition], tDir: String): Unit = {
+  def writeTiles(spark: SparkSession, df: DataFrame, keyCol: String,
+      work: Seq[Partition], tDir: String): Long = {
+    if (work.isEmpty) return 0L
+    val tagged = tag(df, keyCol, work)
     // This run OWNS every work tile, so clear their directories first:
     // dynamic overwrite only replaces tiles that receive rows, so a tile
     // whose directory survives a crashed prior run but produces ZERO
     // rows now would otherwise keep its stale rows (the overwrite never
-    // touches it, and the empty-fragment fill below used to skip
-    // existing dirs). Driver-sized fs ops; a crash mid-run is covered
-    // by the commit-last watermark — the whole work list re-runs.
-    val conf0 = spark.sparkContext.hadoopConfiguration
-    work.foreach { p =>
-      val dir = Partitioner.partitionDir(tDir, p)
-      if (Fs.exists(dir, conf0)) Fs.delete(dir, conf0)
-    }
-    tagged
+    // touches it, and the empty-fragment fill below skips existing
+    // dirs). Driver-sized fs ops; a crash mid-run is covered by the
+    // commit-last watermark — the whole work list re-runs.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dirs = work.map(Partitioner.partitionDir(tDir, _))
+    dirs.foreach(dir => if (Fs.exists(dir, conf)) Fs.delete(dir, conf))
+    val rows = counted(tagged, tDir)(_
       .repartition(col(SizeCol), col(StartCol))
       .sortWithinPartitions(SizeCol, StartCol, EndCol, keyCol)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(SizeCol, StartCol, EndCol)
-      .parquet(tDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val emptyDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], rowSchema)
-    work.foreach { p =>
-      val dir = Partitioner.partitionDir(tDir, p)
+      .parquet(tDir))
+    val emptyDf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      df.schema)
+    dirs.foreach { dir =>
       if (!Fs.exists(dir, conf))
         emptyDf.coalesce(1).write.mode("overwrite").parquet(dir)
     }
+    rows
   }
 
-  /** Tag + write in one call, for frames that need no extra
-    * instrumentation between the two (the ingestion store + index
-    * tables; [[ExtractPipeline]] threads its rows-written `observe`
-    * through [[tag]]/[[writeTagged]] separately).
+  /** Runs `write` over `df` with a row tally observed on it. An empty
+    * frame folds to an empty LocalRelation and the CollectMetrics node is
+    * pruned with it — the observation then completes with NO metrics,
+    * which is exactly zero rows.
     */
-  def writeTiles(spark: SparkSession, df: DataFrame, keyCol: String,
-      work: Seq[Partition], tDir: String): Unit =
-    if (work.nonEmpty)
-      writeTagged(spark, tag(spark, df, keyCol, work), keyCol, df.schema,
-        work, tDir)
+  private def counted(df: DataFrame, name: String)(
+      write: DataFrame => Unit): Long = {
+    val (observed, obs) = Metrics.observed(df, name, count(lit(1)).as("rows"))
+    write(observed)
+    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
+  }
+
+  /** Range-tag: each row of `df` gains its target tile's
+    * `(partition_size, start_partition, end_partition)`. Rows covered
+    * by no work tile drop out — exactly the rows this work-list does
+    * not own.
+    *
+    * Tiles must be tier-ALIGNED (`start % size == 0`), as every
+    * [[Partitioner.plan]] tile is, so the owning tile is COMPUTED per row
+    * — `start = key - pmod(key, size)` per tier, accepted iff that start
+    * is in the tier's work-set (an `InSet` literal probe; work lists are
+    * driver-sized). Everything stays inside whole-stage codegen: a
+    * range-join against the plan would be a BroadcastNestedLoopJoin,
+    * which falls out of codegen and row-copies the full payload (text,
+    * shingle arrays) per probe — measurably brutal at replica scale.
+    * Tier precedence is widest-first, though plan disjointness means at
+    * most one tier can match.
+    */
+  private def tag(df: DataFrame, keyCol: String,
+      work: Seq[Partition]): DataFrame = {
+    require(work.forall(p => p.start % p.size == 0),
+      s"tiles must start on a multiple of their size: " +
+        work.filter(p => p.start % p.size != 0).mkString(", "))
+    val k = col(keyCol)
+    val byTier = work.groupBy(_.size).view.mapValues(_.map(_.start)).toMap
+    val cands = byTier.keys.toSeq.sorted(Ordering[Long].reverse).map { s =>
+      val st = (k - pmod(k, lit(s))).cast("long")
+      when(st.isin(byTier(s): _*), struct(lit(s).as("s"), st.as("st")))
+    }
+    df.withColumn("__tile", coalesce(cands :+ lit(null): _*)
+        .cast("struct<s:bigint,st:bigint>"))
+      .where(col("__tile").isNotNull)
+      .withColumn(SizeCol, col("__tile.s"))
+      .withColumn(StartCol, col("__tile.st"))
+      .withColumn(EndCol, col(SizeCol) + col(StartCol))
+      .drop("__tile")
+  }
 }

@@ -1,7 +1,6 @@
 package graft.extract
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.functions.Transforms
 import graft.model.{ExtractConfig, TableConfig}
@@ -26,12 +25,10 @@ import graft.sinks.Fs
   *     tests/test_get_column_info.py:181-225).
   *
   * Scale note: the reference runs partitions sequentially on one
-  * thread; here each partition's scan→transform→sort→write is a Spark
-  * job (distributed within the partition), and the per-partition loop
-  * itself is embarrassingly parallel — partitions never overlap, so a
-  * scheduler may run them concurrently. Partition *content* stays
-  * deterministic: stable sort on `_block_number` and single-fragment
-  * output per partition directory.
+  * thread. Here [[BulkWriter]] writes a table's work list in one of two
+  * shapes, picked by its size ([[DefaultBulkThreshold]]); both give each
+  * partition directory one fragment, stably sorted on `_block_number`,
+  * so partition *content* stays deterministic.
   */
 object ExtractPipeline {
 
@@ -40,10 +37,16 @@ object ExtractPipeline {
   final case class ExtractResult(outputRoot: String, tables: Seq[TableResult],
       watermark: Watermark)
 
-  /** Work-lists at or above this size are written by [[writeBulk]] (one
-    * distributed job) instead of the per-partition loop; the loop keeps
-    * tiny incremental runs cheap (no broadcast/range-join overhead) and
-    * mirrors the reference exactly.
+  /** Work lists at or above this size are written by
+    * [[BulkWriter.writeTiles]] (one job over one scan of the union
+    * range); shorter ones by [[BulkWriter.writeEachTile]] (one scan and
+    * one job per partition). Each shape wins on its own side, measured
+    * with the `etlbench` workloads on a 4-core box, each forced shape
+    * interleaved with this pick: with every write in one job (threshold
+    * 1), the one-partition `head_follow` tick got 23% slower (median
+    * 0.80 → 0.99 s, slower in all 13 pairs); with every write per
+    * partition (threshold ∞), a `backfill` op (16 partitions per table)
+    * took 7.0-8.8 s instead of 2.0-2.1 s.
     */
   val DefaultBulkThreshold = 16
 
@@ -63,7 +66,6 @@ object ExtractPipeline {
       config: ExtractConfig,
       outputLocation: String,
       nowMillis: Long = System.currentTimeMillis(),
-      bulkThreshold: Int = DefaultBulkThreshold,
       tableParallelism: Int = DefaultTableParallelism): ExtractResult = {
     val conf = spark.sparkContext.hadoopConfiguration
     val cat = source.catalog(spark).getOrElse(config.subgraph,
@@ -91,33 +93,15 @@ object ExtractPipeline {
       val work = Partitioner.worklist(newPlan, oldPlan)
       val types = source.columnTypes(spark, cat.schemaName, table)
       val tDir = Partitioner.tableDir(root, config.subgraph, table)
-      def convert(raw: DataFrame): DataFrame =
-        Transforms.convertColumns(raw, types, tc)
-      // rows-written rides the write itself via `observe` (zero extra
-      // scans) — the per-run tally a production pipeline reconciles
-      // against the sink's own accounting (see the _metadata check in
-      // ExtractPipelineSpec)
-      val rowsWritten: Long =
-        if (work.size >= bulkThreshold)
-          writeBulk(spark, source, cat.schemaName, table, convert, work, tDir)
-        else work.map { p =>
-          // O1 determinism: one sorted fragment per partition directory
-          // (partition tier sizing — not file-count knobs — controls
-          // fragment size, mirroring the reference's one-file contract).
-          val (df, obs) = graft.sinks.Metrics.observed(
-            convert(source.scanRange(spark, cat.schemaName, table, p.start, p.end)),
-            s"extract-$table-${p.size}-${p.start}",
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("rows"))
-          df.repartition(1)
-            .sortWithinPartitions(Transforms.BlockColumn)
-            .write.mode("overwrite")
-            .parquet(Partitioner.partitionDir(tDir, p))
-          // an empty partition folds to an empty LocalRelation and the
-          // CollectMetrics node is pruned with it — the observation then
-          // completes with NO metrics, which is exactly zero rows
-          obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
-        }.sum
+      def scan(start: Long, end: Long): DataFrame = Transforms.convertColumns(
+        source.scanRange(spark, cat.schemaName, table, start, end), types, tc)
+      val rowsWritten =
+        if (work.size >= DefaultBulkThreshold)
+          BulkWriter.writeTiles(spark,
+            scan(work.map(_.start).min, work.map(_.end).max),
+            Transforms.BlockColumn, work, tDir)
+        else BulkWriter.writeEachTile(Transforms.BlockColumn, work, tDir)(
+          p => scan(p.start, p.end))
       // Superseded partitions (smaller tiers now covered by a larger
       // one after the range grew) are pruned so whole-directory readers
       // never double-count; `_metadata` (K2) is then built from the
@@ -146,42 +130,5 @@ object ExtractPipeline {
       cat.earliestBlock, cat.latestBlock)
     Watermark.commit(root, wm, conf)
     ExtractResult(root, results, wm)
-  }
-
-  /** Bulk sink: the whole work-list in ONE distributed job. One scan
-    * covers the union range (predicate still pushed down); rows are
-    * tagged with their target partition via a broadcast range-join
-    * against the (tiny) plan; a hash repartition on the partition key
-    * puts each partition's rows in exactly one task, so the
-    * partitionBy writer emits the same one-sorted-fragment-per-
-    * directory layout as the loop. Dynamic partition overwrite replaces
-    * only the touched directories — old partitions are untouched, and
-    * crashed re-runs stay idempotent.
-    *
-    * At 100 TB this is the difference between thousands of serialized
-    * driver-scheduled jobs and one job whose tasks fan out across the
-    * cluster. (The largest tier bounds per-task data — tier sizing is
-    * the skew control.)
-    */
-  private def writeBulk(
-      spark: SparkSession,
-      source: EntitySource,
-      schemaName: String,
-      table: String,
-      convert: DataFrame => DataFrame,
-      work: Vector[Partition],
-      tDir: String): Long = {
-    val lo = work.map(_.start).min
-    val hi = work.map(_.end).max
-    val converted = convert(source.scanRange(spark, schemaName, table, lo, hi))
-    val (tagged, obs) = graft.sinks.Metrics.observed(
-      BulkWriter.tag(spark, converted, Transforms.BlockColumn, work),
-      s"extract-bulk-$table",
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-    BulkWriter.writeTagged(spark, tagged, Transforms.BlockColumn,
-      converted.schema, work, tDir)
-    // same empty-plan caveat as the loop path: no metrics == zero rows
-    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
   }
 }

@@ -187,11 +187,11 @@ object IngestionPipeline {
     // probe's lazy checkpoint severs here (before any write), and the
     // shared newDocs/verdict blocks fill once under the block locks
     Dedup.fillCaches(allAdmitted, allIdx)
-    // Bulk tiled sink (ONE distributed job per table, not a sequential
-    // per-tile driver loop): broadcast range-tag + dynamic-partition-
-    // overwrite, one sorted fragment per worklist directory. The
-    // persisted allAdmitted/allIdx frames are each scanned exactly once
-    // per table write instead of once per tile.
+    // One-job tiled sink (ONE distributed job per table, not a
+    // sequential per-tile driver loop): computed tile tag + dynamic-
+    // partition overwrite, one sorted fragment per worklist directory.
+    // The persisted allAdmitted/allIdx frames are each scanned exactly
+    // once per table write instead of once per tile.
     // admitted tally BEFORE the writes: the bulk jobs below invalidate
     // cached plans under the table roots, and a post-write count would
     // recompute the probe chain from files
@@ -221,6 +221,11 @@ object IngestionPipeline {
     // THE commit point — everything above is redoable, nothing below
     val wm = Watermark(Subgraph, Table, nowMillis, 0L, latestDocId)
     Watermark.commit(storeRoot, wm, conf)
+    // Superseded tiles (smaller tiers a consolidated tile now covers) go
+    // only AFTER the commit: until then they are the committed plan's
+    // directories, which a crashed run's re-run reads as its registry. A
+    // crash between commit and prune leaves them to the next run's prune.
+    Seq(tDir, iDir).foreach(MetadataSink.pruneStalePartitions(_, newPlan, conf))
     newDocs.unpersist()
     allAdmitted.unpersist()
     allIdx.unpersist()

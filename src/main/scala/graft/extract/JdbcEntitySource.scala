@@ -1,24 +1,29 @@
 package graft.extract
 
+import java.sql.{DriverManager, ResultSet}
+
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** JDBC implementation of [[EntitySource]] against a live graph-node
   * Postgres — the production twin of [[ParquetEntitySource]].
   *
-  * Each method pushes the reference's exact SQL into Postgres as a
-  * `dbtable` subquery (reference subgraph_extractor/cli.py:24-53,
-  * 56-69, 72-92, 366-380): the range predicate, `lower(block_range)`
-  * projection, and catalog joins all execute server-side, so only
-  * result rows cross the wire — Catalyst cannot synthesize PG range
-  * functions, hence the explicit subqueries (SURVEY.md §4).
+  * Each method runs the reference's exact SQL in Postgres (reference
+  * subgraph_extractor/cli.py:24-53, 56-69, 72-92, 366-380): the range
+  * predicate, `lower(block_range)` projection, and catalog joins all
+  * execute server-side, so only result rows cross the wire — Catalyst
+  * cannot synthesize PG range functions, hence the explicit SQL
+  * (SURVEY.md §4). The metadata queries answer a few rows each, so they
+  * run on the driver over plain `java.sql` and start no Spark job; the
+  * range scan is a `spark.read.jdbc` `dbtable` subquery.
   *
   * Test coverage (no pgjdbc jar in this environment, so the PG-wire +
   * Spark combination specifically can't run): the SQL strings are
   * pinned by JdbcEntitySourceSpec, executed against a REAL throwaway
   * Postgres (int4range, ::casts, information_schema semantics) by
-  * PostgresSqlContractSpec, and the `spark.read.jdbc` plumbing itself
-  * (url/driver/dbtable-subquery wiring, positional collects, striping)
+  * PostgresSqlContractSpec, and the JDBC plumbing itself (url/driver
+  * wiring, positional row mappings, the `spark.read.jdbc` striping)
   * runs end-to-end on embedded Derby in DerbyJdbcSmokeSpec; the
   * behavioral contract is integration-tested via ParquetEntitySource
   * against the same trait.
@@ -46,22 +51,30 @@ final class JdbcEntitySource(url: String, props: java.util.Properties,
       .options(extra)
       .load()
 
+  /** Runs `sql` on the driver and maps each result row with `row`. The
+    * `driver` property names the JDBC driver class, as for Spark's reader.
+    */
+  private def query[A](sql: String)(row: ResultSet => A): Seq[A] = {
+    Option(props.getProperty("driver")).foreach(Class.forName)
+    Using.resource(DriverManager.getConnection(url, props)) { conn =>
+      val rs = conn.createStatement().executeQuery(sql)
+      Iterator.continually(rs).takeWhile(_.next()).map(row).toVector
+    }
+  }
+
   override def catalog(spark: SparkSession): Map[String, CatalogEntry] =
-    jdbc(spark, JdbcEntitySource.catalogSql)
-      .collect()
-      .map { r =>
-        r.getString(0) -> CatalogEntry(r.getString(0), r.getString(1),
-          r.getString(2), r.getString(3), r.getLong(4), r.getLong(5))
-      }.toMap
+    query(JdbcEntitySource.catalogSql) { r =>
+      r.getString(1) -> CatalogEntry(r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4), r.getLong(5), r.getLong(6))
+    }.toMap
 
   override def tableNames(spark: SparkSession, schema: String): Seq[String] =
-    jdbc(spark, JdbcEntitySource.tableNamesSql(schema))
-      .collect().map(_.getString(0)).toSeq
+    query(JdbcEntitySource.tableNamesSql(schema))(_.getString(1))
 
   override def columnTypes(spark: SparkSession, schema: String,
       table: String): Map[String, String] =
-    jdbc(spark, JdbcEntitySource.columnTypesSql(schema, table))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    query(JdbcEntitySource.columnTypesSql(schema, table))(
+      r => r.getString(1) -> r.getString(2)).toMap
 
   override def scanRange(spark: SparkSession, schema: String, table: String,
       start: Long, end: Long): DataFrame =

@@ -61,7 +61,7 @@ class BulkScaleSpec extends AnyFunSuite with SparkTestBase {
     catDf(hi1)
     val t0 = System.nanoTime()
     val r1 = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      cfg, out, 1L, bulkThreshold = 1)
+      cfg, out, 1L)
     val sec1 = (System.nanoTime() - t0) / 1e9
     val w1 = r1.tables.head.written
     info(f"first bulk run: ${w1.size} partitions in $sec1%.1f s")
@@ -74,8 +74,9 @@ class BulkScaleSpec extends AnyFunSuite with SparkTestBase {
 
     catDf(hi2)
     val r2 = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      cfg, out, 2L, bulkThreshold = 1)
+      cfg, out, 2L)
     val w2 = r2.tables.head.written
+    assert(w2.size >= ExtractPipeline.DefaultBulkThreshold)
     assert(w1.toSet.intersect(w2.toSet).isEmpty)
     val total = spark.read.parquet(tDir).count()
     val expectedAll = spark.read.parquet(s"$src/sgd1/big_table.parquet")
@@ -118,5 +119,19 @@ class BulkScaleSpec extends AnyFunSuite with SparkTestBase {
     val t1 = spark.read.parquet(Partitioner.partitionDir(tDir, work(1)))
     assert(t1.count() === 0L)
     assert(t1.columns.toSet === Set("k", "v"))
+  }
+
+  test("an unaligned tile list fails before anything is written or cleared") {
+    import spark.implicits._
+    val tDir = Files.createTempDirectory("bulk-unaligned").toString
+    val aligned = graft.plans.Partition(64L, 0L, 64L)
+    Seq((10L, "kept")).toDF("k", "v")
+      .write.parquet(Partitioner.partitionDir(tDir, aligned))
+    val df = Seq((10L, "new"), (40L, "new2")).toDF("k", "v")
+    val e = intercept[IllegalArgumentException](BulkWriter.writeTiles(spark,
+      df, "k", Seq(aligned, graft.plans.Partition(64L, 96L, 160L)), tDir))
+    assert(e.getMessage.contains("Partition(64,96,160)"))
+    assert(spark.read.parquet(Partitioner.partitionDir(tDir, aligned))
+      .select("v").as[String].collect().toSeq === Seq("kept"))
   }
 }

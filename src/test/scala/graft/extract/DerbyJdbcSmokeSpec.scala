@@ -6,17 +6,16 @@ import java.util.Properties
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{JobCounter, SparkTestBase}
 
-/** Drives [[JdbcEntitySource]] through the REAL `spark.read.jdbc` path
-  * against embedded Derby (the one JDBC engine on this classpath —
-  * it ships with Spark for the metastore). Derby cannot parse the
-  * PG-only statements (`::bigint`, `lower(int4range)`, bare `SELECT *,
-  * expr`) — those execute against genuine Postgres in
-  * PostgresSqlContractSpec — but the information_schema methods run
-  * verbatim here, which exercises the full url/driver/dbtable-subquery
-  * option wiring, Spark's JDBC scan, and the positional collect
-  * mappings that no string assertion can.
+/** Drives [[JdbcEntitySource]] through real JDBC against embedded
+  * Derby (the one JDBC engine on this classpath — it ships with Spark
+  * for the metastore). Derby cannot parse the PG-only statements
+  * (`::bigint`, `lower(int4range)`, bare `SELECT *, expr`) — those
+  * execute against genuine Postgres in PostgresSqlContractSpec — but the
+  * information_schema methods run verbatim here, which exercises the
+  * url/driver wiring and the positional row mappings that no string
+  * assertion can, and the striping test runs Spark's JDBC scan.
   */
 class DerbyJdbcSmokeSpec extends AnyFunSuite with SparkTestBase
     with BeforeAndAfterAll {
@@ -62,13 +61,23 @@ class DerbyJdbcSmokeSpec extends AnyFunSuite with SparkTestBase
 
   private def source = new JdbcEntitySource(url, props)
 
-  test("tableNames executes the pinned SQL through spark.read.jdbc") {
+  test("tableNames executes the pinned SQL over JDBC") {
     assert(source.tableNames(spark, "sgd1") === Seq("swaps"))
   }
 
-  test("columnTypes executes the pinned SQL through spark.read.jdbc") {
+  test("columnTypes executes the pinned SQL over JDBC") {
     assert(source.columnTypes(spark, "sgd1", "swaps") ===
       Map("vid" -> "bigint", "block_range" -> "int4range", "amount" -> "numeric"))
+  }
+
+  test("tableNames and columnTypes start no Spark job") {
+    val jobs = new JobCounter(spark)
+    try {
+      assert(jobs.phase("tableNames")(source.tableNames(spark, "sgd1")) === Seq("swaps"))
+      assert(jobs.phase("columnTypes")(source.columnTypes(spark, "sgd1", "swaps")).size === 3)
+      val started = jobs.started("tableNames", "columnTypes")
+      assert(started.forall(_._2 == 0), s"Spark jobs started per call: $started")
+    } finally jobs.close()
   }
 
   test("scanPartitionOptions stripe a real JDBC scan without loss or overlap") {

@@ -2,10 +2,13 @@ package graft.extract
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.functions.Transforms
+import graft.functions.Transforms.BlockColumn
 import graft.model.{ColumnMapping, ExtractConfig, TableConfig, TargetType}
 import graft.plans.{Partitioner, Watermark}
 import graft.sinks.Fs
@@ -37,6 +40,16 @@ class ExtractPipelineSpec extends AnyFunSuite with SparkTestBase {
           validityColumn = Some("ask_price_valid")),
         ColumnMapping("ask_price_gwei", TargetType.UInt64,
           downscale = Some(BigInt(1000000000L))))))))
+
+  /** The converted `[start, end)` scan of the fixture table under `src`,
+    * as [[ExtractPipeline.extract]] builds it.
+    */
+  private def scanner(src: String): (Long, Long) => DataFrame = {
+    val source = new ParquetEntitySource(src)
+    val types = source.columnTypes(spark, Schema, Table)
+    (start, end) => Transforms.convertColumns(
+      source.scanRange(spark, Schema, Table, start, end), types, config().tables(Table))
+  }
 
   private def tmp(): String =
     Files.createTempDirectory("graft-extract").toString
@@ -212,13 +225,18 @@ class ExtractPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("bulk writer produces the loop writer's exact layout and content") {
+    // both BulkWriter shapes over the same work list and source frames
     val src = tmp(); val outLoop = tmp(); val outBulk = tmp()
     GraphNodeFixture.write(spark, src, FullLatest)
-    val rLoop = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      config(), outLoop, 1L, bulkThreshold = Int.MaxValue)
-    val rBulk = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      config(), outBulk, 1L, bulkThreshold = 1)
-    assert(rLoop.tables.head.written === rBulk.tables.head.written)
+    val scan = scanner(src)
+    val work = Partitioner.plan(EarliestBlock, FullLatest, Tiers)
+    val nLoop = BulkWriter.writeEachTile(BlockColumn, work, tableDir(outLoop))(
+      p => scan(p.start, p.end))
+    val nBulk = BulkWriter.writeTiles(spark,
+      scan(work.head.start, work.last.end), BlockColumn, work, tableDir(outBulk))
+    assert(nLoop === nBulk)
+    MetadataSink.writeMetadata(tableDir(outBulk), work, work,
+      spark.sparkContext.hadoopConfiguration)
 
     // identical partition directory sets
     def dirs(out: String): Set[String] = {
@@ -244,23 +262,25 @@ class ExtractPipelineSpec extends AnyFunSuite with SparkTestBase {
     val a = rows(outLoop)
     val b = rows(outBulk)
     assert(a.map(_.toString) === b.map(_.toString))
-    assert(a.length === 6)
+    assert(a.length === 6 && nBulk === 6)
     assert(MetadataSink.rowCountFromMetadata(tableDir(outBulk),
       spark.sparkContext.hadoopConfiguration) === 6)
   }
 
   test("bulk incremental run only replaces its own partitions (dynamic overwrite)") {
+    // the one-job shape, called directly: the fixture's work lists are
+    // shorter than ExtractPipeline.DefaultBulkThreshold
     val src = tmp(); val out = tmp()
-    GraphNodeFixture.write(spark, src, PartialLatest)
-    val r1 = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      config(), out, 1L, bulkThreshold = 1)
     GraphNodeFixture.write(spark, src, FullLatest)
-    val r2 = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      config(), out, 2L, bulkThreshold = 1)
-    assert(r1.tables.head.written.toSet.intersect(
-      r2.tables.head.written.toSet).isEmpty)
+    val scan = scanner(src)
+    val plan1 = Partitioner.plan(EarliestBlock, PartialLatest, Tiers)
+    val work2 = Partitioner.worklist(
+      Partitioner.plan(EarliestBlock, FullLatest, Tiers), plan1)
+    Seq(plan1, work2).foreach(w => BulkWriter.writeTiles(spark,
+      scan(w.head.start, w.last.end), BlockColumn, w, tableDir(out)))
+    assert(plan1.toSet.intersect(work2.toSet).isEmpty)
     // first-run partitions survived the second bulk write
-    r1.tables.head.written.foreach { p =>
+    plan1.foreach { p =>
       assert(graft.sinks.Fs.exists(
         Partitioner.partitionDir(tableDir(out), p),
         spark.sparkContext.hadoopConfiguration))

@@ -30,6 +30,22 @@ class IngestionPipelineSpec extends AnyFunSuite with SparkTestBase {
     IngestionPipeline.committedStore(spark, src, store)
       .select("doc_id").collect().map(_.getLong(0)).toSet
 
+  /** Copies the files under `from` to the same relative paths under
+    * `to`, keeping any file already there.
+    */
+  private def copyTree(from: String, to: String): Unit = {
+    val base = Paths.get(from)
+    val files = Files.walk(base)
+    try files.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
+      val dst = Paths.get(to).resolve(base.relativize(f))
+      if (!Files.exists(dst)) {
+        Files.createDirectories(dst.getParent)
+        Files.copy(f, dst)
+      }
+    }
+    finally files.close()
+  }
+
   private def rmTree(p: String): Unit = {
     val path = Paths.get(p)
     if (Files.exists(path))
@@ -58,14 +74,19 @@ class IngestionPipelineSpec extends AnyFunSuite with SparkTestBase {
     val store = freshStore()
     IngestionPipeline.ingest(spark, src, store, latestDocId = 160L)
     val wmAfter1 = Files.readString(Paths.get(Watermark.path(store)))
+    // run 1's directories, which a run 2 that crashed before its commit
+    // would not yet have pruned
+    val run1 = Files.createTempDirectory("ingest-run1").toString
+    copyTree(store, run1)
 
     IngestionPipeline.ingest(spark, src, store, latestDocId = 320L)
     val healthy = storeDocs(store)
 
-    // forge the crash state: one of run 2's partition directories is
-    // missing AND the watermark still reads as run 1's (the reference's
-    // exact regression: progress must come from the watermark, never
-    // from what happens to exist on disk)
+    // forge the crash state: run 1's tiles are all present, one of run
+    // 2's partition directories is missing AND the watermark still reads
+    // as run 1's (the reference's exact regression: progress must come
+    // from the watermark, never from what happens to exist on disk)
+    copyTree(run1, store)
     val plan1 = Partitioner.plan(0L, 160L, IngestionPipeline.DefaultTierSizes)
     val plan2 = Partitioner.plan(0L, 320L, IngestionPipeline.DefaultTierSizes)
     val work2 = Partitioner.worklist(plan2, plan1)
@@ -89,6 +110,21 @@ class IngestionPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(Files.exists(Paths.get(idxVictim)), "missing INDEX dir not rewritten")
     assert(storeDocs(store) == healthy,
       "healed store must equal the uninterrupted result")
+    spark.catalog.clearCache()
+  }
+
+  test("superseded tiles are pruned: a whole-directory read counts each admitted doc once") {
+    val store = freshStore()
+    // 160 ends on two 16-tiles that the 64-tile [128, 192) of the
+    // 320 run supersedes
+    val rs = Seq(160L, 320L).map(l => IngestionPipeline.ingest(spark, src, store, latestDocId = l))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val admitted = rs.map(_.nAdmitted).sum
+    Seq(IngestionPipeline.Table, IngestionPipeline.IndexTable).foreach { t =>
+      val dir = Partitioner.tableDir(store, IngestionPipeline.Subgraph, t)
+      assert(spark.read.parquet(dir).count() === admitted, t)
+      assert(MetadataSink.rowCountFromMetadata(dir, conf) === admitted, t)
+    }
     spark.catalog.clearCache()
   }
 

@@ -1,16 +1,13 @@
 package graft.extract
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{JobCounter, SparkTestBase}
 
 /** `ParquetEntitySource` answers metadata on the driver: no call to
   * `catalog`, `tableNames` or `columnTypes`, and no unexecuted
@@ -153,40 +150,20 @@ class ParquetEntitySourceSpec extends AnyFunSuite with SparkTestBase {
   test("metadata calls and building a scan start no Spark job") {
     val src = tmp()
     GraphNodeFixture.write(spark, src, 19000000L)
-    val tag = "graft.ParquetEntitySourceSpec"
-    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach { phase =>
-          jobs.computeIfAbsent(phase, _ => new AtomicInteger()).incrementAndGet()
-          if (phase == "marker") marker.countDown()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
+    val jobs = new JobCounter(spark)
     try {
       val source = new ParquetEntitySource(src)
-      def phase[T](name: String)(body: => T): T = {
-        sc.setLocalProperty(tag, name)
-        try body finally sc.setLocalProperty(tag, null)
-      }
-      val cat = phase("catalog")(source.catalog(spark))
-      val tables = phase("tableNames")(source.tableNames(spark, Schema))
-      val types = phase("columnTypes")(source.columnTypes(spark, Schema, Table))
-      val scan = phase("scanRange")(source.scanRange(spark, Schema, Table, 0L, 19000000L))
+      val cat = jobs.phase("catalog")(source.catalog(spark))
+      val tables = jobs.phase("tableNames")(source.tableNames(spark, Schema))
+      val types = jobs.phase("columnTypes")(source.columnTypes(spark, Schema, Table))
+      val scan = jobs.phase("scanRange")(source.scanRange(spark, Schema, Table, 0L, 19000000L))
       assert(cat.keySet === Set(Subgraph))
       assert(tables === Seq(Table))
       assert(types("ask_price") === "numeric")
-      // the listener sees job starts in order, so once the marker job is
-      // seen every job the calls above started has been counted
-      phase("marker")(spark.range(1).count())
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      val started = Seq("catalog", "tableNames", "columnTypes", "scanRange")
-        .map(p => p -> Option(jobs.get(p)).fold(0)(_.get))
+      val started = jobs.started("catalog", "tableNames", "columnTypes", "scanRange")
       assert(started.forall(_._2 == 0), s"Spark jobs started per call: $started")
       assert(scan.count() === EntityBlocks.size)
-    } finally sc.removeSparkListener(l)
+    } finally jobs.close()
   }
 
   test("catalog, tableNames and columnTypes match the Spark plans they replaced") {

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Executes [[JdbcEntitySource]]'s pinned Postgres SQL against a REAL
   * throwaway Postgres cluster (this container ships server binaries and
   * a `postgres` user, but no pgjdbc jar — so the strings run through
-  * `psql` here, while DerbyJdbcSmokeSpec drives the `spark.read.jdbc`
-  * plumbing; together they cover everything but the PG-wire+Spark
+  * `psql` here, while DerbyJdbcSmokeSpec drives the JDBC plumbing;
+  * together they cover everything but the PG-wire+Spark
   * combination, which needs the driver jar).
   *
   * This is the check string-pinning can't give: `lower(block_range)` on
