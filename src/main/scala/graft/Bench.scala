@@ -46,9 +46,9 @@ object Bench {
     "q3_shipping" -> 1.046,
     "q_set_ops" -> 0.575,
     // was q_merge_upsert, swapped when the compute-parallelism floor
-    // (Tables.flooredTable) touched every documents/events/embeddings
-    // reader — canaries must be queries NO engine change reaches, and
-    // q12 runs on the un-floored TPC-H tables only
+    // (now Tables.documentsFloored only) touched every
+    // documents/events/embeddings reader — canaries must be queries NO
+    // engine change reaches, and q12 runs on the un-floored TPC-H tables
     "q12_late_lines" -> 0.509)
   /** 1m/5m/15m load averages, or empty when /proc/loadavg is unreadable
     * (non-Linux). Sampled before AND after the run: the before sample is

@@ -27,19 +27,12 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       // AQE coalescing can only merge DOWN from the initial partition
-      // count — with the default (initial = shuffle.partitions = cpus),
-      // a 1000×-scale global sort is stuck at 32 partitions of ~1 GB+
-      // of raw rows each and spills multiple passes (measured: 59 GB
-      // spilled on a 7.6 GB sort exchange). A/B at the 1000× replica
-      // (SWEEP_r14b): initial=8×cpus cuts that query's spill 38% and
-      // wall 18%, but costs ~5-8% on the NON-spilling heavy families
-      // (more shuffle segments, worse per-bucket compression — write
-      // bytes doubled) — not a default-worthy trade on one box, so the
-      // default stays engine behavior and the knob is env-gated. A real
-      // deployment sizes this to data volume (bytes / advisory target),
-      // which local mode cannot know up front.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
+      // count, so this is the widest a shuffle starts. It stays at the
+      // shuffle width: a global 8×cpus start cut a 1000×-replica sort's
+      // spill 38% but cost the non-spilling families 5-8% (SWEEP_r14b).
+      // Tables.widthRatchet raises it per session only where a reader
+      // sees real volume.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
       // Without this, any plan under a persist() (every iterative loop:
       // star contraction, label propagation, the dedup signature caches)
       // runs WITHOUT AQE partition coalescing, so a 2k-row edge frame
@@ -47,27 +40,6 @@ object Sessions {
       // cached-plan output trades exact cache-partitioning reuse for
       // right-sized shuffles — the correct trade for iterative graphs.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // compute-parallelism floor for small-split per-row-CPU scans
-      // (graft.sources.Tables.computeFloor): "off" | "opt-in" | "on".
-      // Default opt-in (only measured-winner operators request it) — a
-      // full 181-query A/B at sf0.1 (r14) showed floor-everywhere
-      // costs more in stage/task overhead than the map-side
-      // parallelism returns on all but the most CPU-dense queries.
-      .config("spark.graft.computeFloor",
-        sys.env.getOrElse("SPARK_GRAFT_COMPUTE_FLOOR", "opt-in"))
-      // reader-conditioned shuffle-width ratchet (Tables.widthRatchet):
-      // "on" (default) | "off". Volume-sized AQE initial width — the
-      // cure for the 1000×-replica big-join super-linearity (q12 ran
-      // 324 s for a 7-row output at the fixed 32-partition width);
-      // guaranteed no-op on fixtures below ~32 MB/table, i.e. all
-      // graded small-scale runs.
-      .config("spark.graft.shuffleWidthRatchet",
-        sys.env.getOrElse("SPARK_GRAFT_WIDTH_RATCHET", "on"))
-      // precomputed footer-stat range bounds for the volume global sort
-      // (MetaRangeBounds/GraftRangeBridge): "on" (default) | "off"
-      // forces Spark's sampling range exchange — the A/B control
-      .config("spark.graft.metaRangeBounds",
-        sys.env.getOrElse("SPARK_GRAFT_META_RANGE", "on"))
       // managed (bucketed) tables land outside the repo checkout
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{Partition, Partitioner}
-import graft.sinks.{Fs, Metrics}
+import graft.sinks.Metrics
 
-/** The tiled parquet sink of [[ExtractPipeline]] and [[IngestionPipeline]],
-  * and the one module that knows the tile layout: one fragment per
+/** The tiled parquet sink of [[ExtractPipeline]], [[IngestionPipeline]]
+  * and [[graft.streaming.StreamingExtract]], and the one module that
+  * knows the tile layout: one fragment per
   * `partition_size=/start_partition=/end_partition=` directory, sorted by
   * the key column (reference layout: subgraph_extractor/cli.py:189-197);
   * every work tile's directory readable with the full schema, even when
@@ -49,38 +50,42 @@ object BulkWriter {
     * their `keyCol`; rows of no work tile drop out. The task sort MUST
     * lead with every partitionBy column: FileFormatWriter otherwise
     * inserts its own (unstable) sort on the partition keys and the
-    * within-fragment key order is lost (the BulkScaleSpec lesson). Tiles
-    * that end up with no rows get an explicit schema-preserving empty
-    * fragment — `partitionBy` skips empties. Returns the rows written.
+    * within-fragment key order is lost (the BulkScaleSpec lesson).
+    * Dynamic partition overwrite replaces only the tiles that receive
+    * rows, each at job commit, so a failed write leaves every tile as it
+    * was — a caller that cannot re-derive a tile's old rows (a stream
+    * merging into it) loses nothing. The write observes which tiles got
+    * rows; every other work tile gets an explicit schema-preserving
+    * empty fragment (`partitionBy` skips empties) that overwrites
+    * whatever a crashed prior run left in its directory. Returns the
+    * rows written.
     */
   def writeTiles(spark: SparkSession, df: DataFrame, keyCol: String,
       work: Seq[Partition], tDir: String): Long = {
     if (work.isEmpty) return 0L
-    val tagged = tag(df, keyCol, work)
-    // This run OWNS every work tile, so clear their directories first:
-    // dynamic overwrite only replaces tiles that receive rows, so a tile
-    // whose directory survives a crashed prior run but produces ZERO
-    // rows now would otherwise keep its stale rows (the overwrite never
-    // touches it, and the empty-fragment fill below skips existing
-    // dirs). Driver-sized fs ops; a crash mid-run is covered by the
-    // commit-last watermark — the whole work list re-runs.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirs = work.map(Partitioner.partitionDir(tDir, _))
-    dirs.foreach(dir => if (Fs.exists(dir, conf)) Fs.delete(dir, conf))
-    val rows = counted(tagged, tDir)(_
+    val (observed, obs) = Metrics.observed(tag(df, keyCol, work), tDir,
+      count(lit(1)).as("rows"),
+      collect_set(struct(col(SizeCol), col(StartCol))).as("tiles"))
+    observed
       .repartition(col(SizeCol), col(StartCol))
       .sortWithinPartitions(SizeCol, StartCol, EndCol, keyCol)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(SizeCol, StartCol, EndCol)
-      .parquet(tDir))
+      .parquet(tDir)
+    // an empty frame completes the observation with NO metrics (see
+    // `counted`): zero rows, no tile filled
+    val metrics = obs.get
+    val filled = metrics.get("tiles").toSeq
+      .flatMap(_.asInstanceOf[Seq[Row]])
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val emptyDf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       df.schema)
-    dirs.foreach { dir =>
-      if (!Fs.exists(dir, conf))
-        emptyDf.coalesce(1).write.mode("overwrite").parquet(dir)
+    work.filterNot(p => filled((p.size, p.start))).foreach { p =>
+      emptyDf.coalesce(1).write.mode("overwrite")
+        .parquet(Partitioner.partitionDir(tDir, p))
     }
-    rows
+    metrics.getOrElse("rows", 0L).asInstanceOf[Long]
   }
 
   /** Runs `write` over `df` with a row tally observed on it. An empty

@@ -51,12 +51,11 @@ object ExtractPipeline {
   val DefaultBulkThreshold = 16
 
   /** Tables are independent datasets (disjoint directories, no shared
-    * state besides the read-only catalog), so their extract jobs can be
-    * submitted concurrently — Spark's scheduler interleaves the jobs'
-    * tasks across the cluster, which matters when many small tables
-    * would otherwise serialize driver-side planning and job setup (the
-    * reference is fully sequential, cli.py:296-328). Default 4 in
-    * flight; 1 reproduces the reference's sequential behavior exactly.
+    * state besides the read-only catalog), so their extract jobs are
+    * submitted concurrently, this many in flight — Spark's scheduler
+    * interleaves the jobs' tasks across the cluster, which matters when
+    * many small tables would otherwise serialize driver-side planning
+    * and job setup (the reference is fully sequential, cli.py:296-328).
     */
   val DefaultTableParallelism = 4
 
@@ -65,8 +64,7 @@ object ExtractPipeline {
       source: EntitySource,
       config: ExtractConfig,
       outputLocation: String,
-      nowMillis: Long = System.currentTimeMillis(),
-      tableParallelism: Int = DefaultTableParallelism): ExtractResult = {
+      nowMillis: Long = System.currentTimeMillis()): ExtractResult = {
     val conf = spark.sparkContext.hadoopConfiguration
     val cat = source.catalog(spark).getOrElse(config.subgraph,
       throw new IllegalArgumentException(
@@ -102,28 +100,21 @@ object ExtractPipeline {
             Transforms.BlockColumn, work, tDir)
         else BulkWriter.writeEachTile(Transforms.BlockColumn, work, tDir)(
           p => scan(p.start, p.end))
-      // Superseded partitions (smaller tiers now covered by a larger
-      // one after the range grew) are pruned so whole-directory readers
-      // never double-count; `_metadata` (K2) is then built from the
-      // CURRENT plan's partitions only, matching the reference
-      // (cli.py:328 writes it from the run's partition list).
-      MetadataSink.pruneStalePartitions(tDir, newPlan, conf)
-      // incremental: only this run's fragments get their footers read;
-      // unchanged partitions' row groups come from the previous _metadata
+      // `_metadata` (K2) is built from the CURRENT plan's partitions
+      // only (cli.py:328 writes it from the run's partition list), and
+      // BEFORE superseded partitions (smaller tiers now covered by a
+      // larger one) are pruned: a failure between the two steps then
+      // leaves an old `_metadata` whose fragments all still exist.
       val fragments = MetadataSink.writeMetadata(tDir, newPlan, work, conf)
+      MetadataSink.pruneStalePartitions(tDir, newPlan, conf)
       TableResult(table, work, fragments, rowsWritten)
     }
 
     val tableSeq = config.tables.toSeq.sortBy(_._1)
-    val par = tableParallelism.min(tableSeq.size).max(1)
-    val results: Seq[TableResult] =
-      if (par <= 1) tableSeq.map { case (t, tc) => runTable(t, tc) }
-      else
-        // input (table-name) order in the result; any table's failure
-        // stops the siblings and propagates before the watermark commit
-        // below — crash consistency is unchanged
-        graft.Parallel.all(spark.sparkContext, par)(
-          tableSeq.map { case (t, tc) => () => runTable(t, tc) })
+    // input (table-name) order in the result; any table's failure stops
+    // the siblings and propagates before the watermark commit below
+    val results = graft.Parallel.all(spark.sparkContext, DefaultTableParallelism)(
+      tableSeq.map { case (t, tc) => () => runTable(t, tc) })
 
     // K5 commit point — strictly after all tables succeeded.
     val wm = Watermark(config.subgraph, cat.deployment, nowMillis,

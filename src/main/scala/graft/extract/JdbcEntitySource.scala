@@ -63,10 +63,7 @@ final class JdbcEntitySource(url: String, props: java.util.Properties,
   }
 
   override def catalog(spark: SparkSession): Map[String, CatalogEntry] =
-    query(JdbcEntitySource.catalogSql) { r =>
-      r.getString(1) -> CatalogEntry(r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getLong(5), r.getLong(6))
-    }.toMap
+    query(JdbcEntitySource.catalogSql)(JdbcEntitySource.catalogRow).toMap
 
   override def tableNames(spark: SparkSession, schema: String): Seq[String] =
     query(JdbcEntitySource.tableNamesSql(schema))(_.getString(1))
@@ -103,6 +100,13 @@ object JdbcEntitySource {
       |WHERE ds.active AND s.current_version IS NOT NULL
       |  AND sd.earliest_block_number IS NOT NULL
       |  AND sd.latest_ethereum_block_number IS NOT NULL""".stripMargin
+
+  /** One [[catalogSql]] result row, by column position, keyed by its
+    * subgraph name.
+    */
+  private[extract] def catalogRow(r: ResultSet): (String, CatalogEntry) =
+    r.getString(1) -> CatalogEntry(r.getString(1), r.getString(2),
+      r.getString(3), r.getString(4), r.getLong(5), r.getLong(6))
 
   /** cli.py:366-380 — extractable-table listing. */
   def tableNamesSql(schema: String): String =

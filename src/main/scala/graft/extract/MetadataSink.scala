@@ -10,7 +10,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import graft.plans.Partition
 
 /** `_metadata` summary sink (K2, reference cli.py:245-273): collect the
-  * footer of every data fragment under a table directory and write one
+  * footer of every data fragment in a table's current plan and write one
   * combined `_metadata` file, so planners can enumerate row groups and
   * stats without listing or opening fragments.
   *
@@ -20,40 +20,6 @@ import graft.plans.Partition
   * implements by hand (cli.py:259-268).
   */
 object MetadataSink {
-
-  /** Collect footers of all `*.parquet` files under `tableDir`
-    * (recursive, skipping `_`-prefixed files) and write
-    * `tableDir/_metadata`. Returns the number of fragments summarized.
-    *
-    * Only safe when every fragment on disk belongs to the current plan —
-    * prefer [[writeMetadata(tableDir:String,plan:Seq[graft\.plans\.Partition],conf:org\.apache\.hadoop\.conf\.Configuration)*
-    * the plan-scoped overload]], which cannot double-count blocks when a
-    * grown range makes a larger tier supersede smaller partitions
-    * (reference writes `_metadata` from the current plan's partitions
-    * only, cli.py:328 + cli.py:245-273).
-    */
-  def writeMetadata(tableDir: String, conf: Configuration): Int = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(conf)
-    writeFooters(dir, listFragments(fs, dir, conf), conf)
-  }
-
-  /** Plan-scoped `_metadata`: summarize ONLY fragments inside the given
-    * plan's partition directories. Fragments of superseded partitions
-    * (a smaller tier now covered by a larger one) are excluded, so
-    * `_metadata`-driven readers never see a block twice even if stale
-    * directories still exist on disk.
-    */
-  def writeMetadata(tableDir: String, plan: Seq[Partition],
-      conf: Configuration): Int = {
-    val dir = new Path(tableDir)
-    val fs = dir.getFileSystem(conf)
-    val files = plan.map(p => new Path(dir, p.relativePath))
-      .filter(fs.exists)
-      .flatMap(pd => listFragments(fs, pd, conf))
-      .sortBy(_.toString)
-    writeFooters(dir, files, conf)
-  }
 
   /** Delete partition directories under `tableDir` that are provably
     * SUPERSEDED by the current plan: a directory `[start, end)` of tier
@@ -125,44 +91,58 @@ object MetadataSink {
       .sortBy(_.toString)
   }
 
-  private def writeFooters(dir: Path, files: Seq[Path],
-      conf: Configuration): Int = {
-    val footers = files.map { p =>
-      val meta = ParquetFileReader.readFooter(conf, p,
-        ParquetMetadataConverter.NO_FILTER)
-      new Footer(p, meta)
-    }
-    if (footers.nonEmpty)
-      ParquetFileWriter.writeMetadataFile(conf, dir, footers.asJava)
-    footers.size
-  }
-
-  /** Incremental `_metadata` update: footers of fragments under
-    * `written` partitions are read fresh; every other plan partition's
-    * row-group metadata is lifted out of the EXISTING `_metadata` file
-    * instead of re-opening its fragments. An incremental run therefore
-    * does O(|new fragments|) footer reads, not O(|all fragments|) — the
-    * difference between a constant-cost head append and a full remote
-    * directory sweep once a table holds thousands of fragments.
-    * Falls back to the full plan-scoped rebuild when no `_metadata`
-    * exists yet. Output is byte-equivalent to a full rebuild (covered by
-    * ExtractPipelineSpec).
+  /** Plan-scoped `_metadata`: summarizes ONLY fragments inside `plan`'s
+    * partition directories, so fragments of superseded partitions (a
+    * smaller tier now covered by a larger one) never appear and
+    * `_metadata`-driven readers never see a block twice, even while
+    * stale directories still exist on disk (the reference writes
+    * `_metadata` from the current plan's partitions only, cli.py:328 +
+    * cli.py:245-273).
+    *
+    * Incremental: footers of fragments under `written` partitions are
+    * read fresh; every other plan partition's row-group metadata is
+    * lifted out of the EXISTING `_metadata` file instead of re-opening
+    * its fragments. An incremental run therefore does O(|new
+    * fragments|) footer reads, not O(|all fragments|) — the difference
+    * between a constant-cost head append and a full remote directory
+    * sweep once a table holds thousands of fragments. With no
+    * `_metadata` yet, every plan partition is read fresh. Output is
+    * byte-equivalent to that full rebuild (covered by
+    * ExtractPipelineSpec). Returns the number of fragments summarized.
     */
   def writeMetadata(tableDir: String, plan: Seq[Partition],
       written: Seq[Partition], conf: Configuration): Int = {
     val dir = new Path(tableDir)
     val fs = dir.getFileSystem(conf)
     val metaPath = new Path(dir, ParquetFileWriter.PARQUET_METADATA_FILE)
-    if (!fs.exists(metaPath)) return writeMetadata(tableDir, plan, conf)
+    val (kept, fresh) =
+      if (!fs.exists(metaPath)) (Nil, plan)
+      else (keptFooters(fs, dir, metaPath, plan, written, conf), written)
+    val freshFooters = fresh.map(p => new Path(dir, p.relativePath))
+      .filter(fs.exists)
+      .flatMap(pd => listFragments(fs, pd, conf))
+      .map { p =>
+        new Footer(p, ParquetFileReader.readFooter(conf, p,
+          ParquetMetadataConverter.NO_FILTER))
+      }
+    val footers = (kept ++ freshFooters).sortBy(_.getFile.toString)
+    if (footers.nonEmpty)
+      ParquetFileWriter.writeMetadataFile(conf, dir, footers.asJava)
+    footers.size
+  }
 
+  /** Old `_metadata` blocks, grouped per fragment file, for the plan
+    * partitions NOT rewritten this run.
+    */
+  private def keptFooters(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+      metaPath: Path, plan: Seq[Partition], written: Seq[Partition],
+      conf: Configuration): Seq[Footer] = {
     val old = ParquetFileReader.readFooter(conf, metaPath,
       ParquetMetadataConverter.NO_FILTER)
     val writtenPrefixes = written.map(_.relativePath)
     val keepPrefixes = plan.map(_.relativePath)
       .filterNot(writtenPrefixes.contains)
-    // old blocks, grouped per fragment file, for plan partitions that
-    // were NOT rewritten this run
-    val kept = old.getBlocks.asScala.toSeq
+    old.getBlocks.asScala.toSeq
       .filter { b =>
         val p = b.getPath
         // segment-safe prefix: "end_partition=10" must not match
@@ -177,18 +157,6 @@ object MetadataSink {
           new org.apache.parquet.hadoop.metadata.ParquetMetadata(
             old.getFileMetaData, blocks.asJava))
       }
-    // fresh footers only for this run's partitions
-    val fresh = written.map(p => new Path(dir, p.relativePath))
-      .filter(fs.exists)
-      .flatMap(pd => listFragments(fs, pd, conf))
-      .map { p =>
-        new Footer(p, ParquetFileReader.readFooter(conf, p,
-          ParquetMetadataConverter.NO_FILTER))
-      }
-    val footers = (kept ++ fresh).sortBy(_.getFile.toString)
-    if (footers.nonEmpty)
-      ParquetFileWriter.writeMetadataFile(conf, dir, footers.asJava)
-    footers.size
   }
 
   /** Fragment file paths recorded in a `_metadata` file, resolved

@@ -585,10 +585,7 @@ object ParityQueries {
     // volume that needs the bridge (caught by the r16 A/B's identical
     // stage tables). The static conf is the pre-ratchet baseline.
     val floor = spark.sessionState.conf.defaultNumShufflePartitions
-    // spark.graft.metaRangeBounds=off forces the sampling exchange —
-    // the A/B control and the operational escape hatch
-    val metaOn = spark.conf.get("spark.graft.metaRangeBounds", "on") != "off"
-    val ranged = (if (metaOn && sortWidth > floor)
+    val ranged = (if (sortWidth > floor)
       graft.plans.MetaRangeBounds.boundsFor(
         spark.sparkContext.hadoopConfiguration,
         s"${d.stripSuffix("/")}/lineitem.parquet", "l_orderkey", sortWidth)

@@ -29,8 +29,7 @@ object Tables {
     * Bench/Verify/Sweep/PlanStats do; the measured leak was a 6×
     * slowdown on a small-corpus query after a big-table read), and
     * concurrent query CONSTRUCTION from one session should be
-    * serialized or scoped per thread. `spark.graft.shuffleWidthRatchet
-    * =off` disables the ratchet entirely.
+    * serialized or scoped per thread.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = s"${sfDir.stripSuffix("/")}/$name.parquet"
@@ -155,31 +154,6 @@ object Tables {
       4096L).toInt
   }
 
-  /** Shuffle-width ratchet — the volume-sized counterpart of the AQE
-    * initial width, applied where the data volume is actually KNOWN:
-    * the reader. A fixed `spark.sql.shuffle.partitions` cannot be right
-    * at every scale, and AQE coalescing can only merge DOWN from the
-    * configured initial width — so on a session configured for the
-    * small end (32 here), a 600M-row join is stuck shuffling ~20M rows
-    * into each of 32 partitions, and every per-partition hash/sort
-    * blows execution memory and spills. Measured at the 1000× replica
-    * (r15 full-surface probe, pre-fix): the big-join relational family
-    * ran 9-37× super-linear for 10× the 100× data — q12 (a SEVEN-row
-    * output) 324 s, q10 timed out past 910 s. The ratchet raises
-    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` to the
-    * table's volume-sized width whenever a reader observes a table that
-    * implies MORE partitions than the session currently allows; AQE
-    * then sizes every individual stage back DOWN to its advisory
-    * target, so small shuffles in the same session stay exactly as
-    * wide as before — the ratchet only lifts the ceiling AQE is allowed
-    * to start from. It never lowers (a deployment that configured a
-    * wide initial width keeps it), fires only on real volume (at sf0.1
-    * every fixture table implies ≤ 1 partition, so small-scale plans —
-    * and the frozen bench canaries — are byte-identical), and is
-    * session-scoped conf, so `spark.graft.shuffleWidthRatchet=off`
-    * restores engine behavior for A/Bs and plan-shape specs that pin
-    * partition counts.
-    */
   /** The session confs the width ratchet may move. A ratchet decision
     * is derived from the tables ONE query reads, so runners that
     * execute MANY queries in one session (Bench, Verify, Sweep,
@@ -229,12 +203,33 @@ object Tables {
       case (k, None) => spark.conf.unset(k)
     }
 
-  private def widthRatchet(spark: SparkSession, path: String): Unit = {
-    if (spark.conf.get("spark.graft.shuffleWidthRatchet", "on") == "off") return
-    val budget = spark.conf
-      .get("spark.graft.shuffleWidthBytesPerPartition", (32L << 20).toString)
-      .toLong
-    val want = volumeWidth(spark, path, budget)
+  /** Shuffle-width ratchet — the volume-sized counterpart of the AQE
+    * initial width, applied where the data volume is actually KNOWN:
+    * the reader. A fixed `spark.sql.shuffle.partitions` cannot be right
+    * at every scale, and AQE coalescing can only merge DOWN from the
+    * configured initial width — so on a session configured for the
+    * small end (32 here), a 600M-row join is stuck shuffling ~20M rows
+    * into each of 32 partitions, and every per-partition hash/sort
+    * blows execution memory and spills. Measured at the 1000× replica
+    * (r15 full-surface probe, pre-fix): the big-join relational family
+    * ran 9-37× super-linear for 10× the 100× data — q12 (a SEVEN-row
+    * output) 324 s, q10 timed out past 910 s. The ratchet raises
+    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` to the
+    * table's volume-sized width whenever a reader observes a table that
+    * implies MORE partitions than the session currently allows; AQE
+    * then sizes every individual stage back DOWN to its advisory
+    * target, so small shuffles in the same session stay exactly as
+    * wide as before — the ratchet only lifts the ceiling AQE is allowed
+    * to start from. It never lowers (a deployment that configured a
+    * wide initial width keeps it) and fires only on real volume (at sf0.1
+    * every fixture table implies ≤ 1 partition, so small-scale plans —
+    * and the frozen bench canaries — are byte-identical). The budget is
+    * a parameter only so specs can make a tiny fixture read as volume,
+    * the way [[volumeSizedShufflePartitions]] takes its own.
+    */
+  private[graft] def widthRatchet(spark: SparkSession, path: String,
+      bytesPerPartition: Long = 32L << 20): Unit = {
+    val want = volumeWidth(spark, path, bytesPerPartition)
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val cur = spark.conf.getOption(key).map(_.toInt)
       .getOrElse(spark.sessionState.conf.numShufflePartitions)
@@ -255,18 +250,16 @@ object Tables {
     // in one direction per session and only on a volume trigger, so
     // small-scale sessions never see either conf change.
     val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val advisoryWant = spark.conf
-      .get("spark.graft.shuffleWidthAdvisoryBytes", (16L << 20).toString)
-      .toLong
+    val advisoryWant = 16L << 20
     val advisoryCur = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(spark.conf.get(advisoryKey, "64m"))
     if (advisoryWant < advisoryCur)
       spark.conf.set(advisoryKey, advisoryWant.toString)
   }
 
-  /** Compute-parallelism floor for small-split scans of per-row-CPU
-    * tables (text/embedding/event kernels: tokenize, shingle, hash,
-    * JSON-parse, vector math).
+  /** `documents` with the compute-parallelism floor, for operators
+    * whose per-row kernels (tokenize, shingle, hash, JSON-parse) are
+    * CPU-dense enough to pay for one input-conditioning exchange.
     *
     * Parquet scan parallelism is bounded by ROW GROUPS, not bytes:
     * Spark packs byte-range splits (and `minPartitionNum` splits small
@@ -291,42 +284,24 @@ object Tables {
     * Filters and column pruning push through RepartitionByExpression,
     * so scan pushdown is unaffected (pinned by `TablesFloorSpec`).
     *
-    * TPC-H relational tables are deliberately NOT floored: their
-    * map-side work is light arithmetic (scan-bound), the exchange would
-    * be pure overhead at real scale, and the bench box-factor canaries
-    * are drawn from them (frozen code paths by contract).
+    * Only this reader floors, and only measured-winner operators call
+    * it (`Curation.piiScrub`, `jsonlEmit`): a full 181-query A/B at
+    * sf0.1 (r14, 3-rep medians) ran 251 s with no floor against 323 s
+    * with every documents/events/embeddings reader floored (median
+    * per-query ratio 1.26×) — on a tiny fixture the exchange plus
+    * 32-task downstream stages cost more in stage/task overhead than
+    * the map-side parallelism returns for all but the most CPU-dense
+    * kernels. The plain readers ([[documents]], [[embeddings]],
+    * [[events]]) and the TPC-H tables never floor; `TablesFloorSpec`
+    * pins the plan contract (pushdown/pruning survive; no-op at >=cores
+    * row groups).
     */
-  private def computeFloor(spark: SparkSession, df: DataFrame,
-      path: String, key: String, requested: Boolean): DataFrame = {
-    // Session conf, not env: plan-shape specs assert each ALGORITHM's
-    // exchanges with the floor off (it is input conditioning, not part
-    // of any operator's shape), and Sessions maps the env knob here.
-    //
-    // Three states — "off" (never), "opt-in" (the DEFAULT: only call
-    // sites that request it), "on" (every floored reader; the A/B
-    // mode). Default opt-in, from measurement (r14 full-surface A/B at
-    // sf0.1, 3-rep medians, 181 queries): total 251 s floor-off vs
-    // 323 s floor-on-everywhere (box-adjusted ~232 vs ~265), median
-    // per-query ratio 1.26×. The floor's exchange plus 32-task
-    // downstream stages on a tiny fixture cost more in stage/task
-    // overhead than the map-side parallelism returns for all but the
-    // most CPU-dense kernels — so only operators whose win REPEATED in
-    // a targeted multi-rep A/B request it. The knob exists for the
-    // shape it serves — a SMALL corpus with HEAVY per-row kernels on a
-    // BIG fleet — and `TablesFloorSpec` pins its plan contract
-    // (pushdown/pruning survive; no-op at >=cores row groups).
-    val mode = spark.conf.get("spark.graft.computeFloor", "opt-in")
-    val fire = mode == "on" || (mode == "opt-in" && requested)
-    if (!fire) return df
+  def documentsFloored(spark: SparkSession, d: String): DataFrame = {
+    val df = table(spark, d, "documents")
     val cores = spark.sparkContext.defaultParallelism
-    if (rowGroups(spark, path) < cores) df.repartition(cores, col(key)) else df
-  }
-
-  private def flooredTable(spark: SparkSession, sfDir: String,
-      name: String, key: String, requested: Boolean = false): DataFrame = {
-    val p = s"${sfDir.stripSuffix("/")}/$name.parquet"
-    widthRatchet(spark, p)
-    computeFloor(spark, spark.read.parquet(p), p, key, requested)
+    val path = s"${d.stripSuffix("/")}/documents.parquet"
+    if (rowGroups(spark, path) < cores) df.repartition(cores, col("doc_id"))
+    else df
   }
 
   /** Compute-parallelism floor, streaming edition — for a
@@ -339,9 +314,8 @@ object Tables {
     * the source's BYTE-splits, not work distribution — a one-row-group
     * drop file reports 3+ partitions of which one holds every row, so a
     * row-group-conditioned floor cannot even see the skew. The floor
-    * here is therefore UNCONDITIONAL (mode "off" still disables it for
-    * plan-shape specs): one hash exchange of the batch on its row key
-    * before admission. The trade is structural, not fixture-local — the
+    * here is therefore UNCONDITIONAL: one hash exchange of the batch on
+    * its row key before admission. The trade is structural, not fixture-local — the
     * per-row admission work downstream (sha256 content hash, 128-hash
     * minhash on distinct content) dwarfs one row exchange of the same
     * rows (~1 s per 3M docs), and a real deployment's micro-batch is a
@@ -364,7 +338,6 @@ object Tables {
 
   private[graft] def computeFloorForBatch(spark: SparkSession, df: DataFrame,
       key: String, rows: Long): DataFrame = {
-    if (spark.conf.get("spark.graft.computeFloor", "opt-in") == "off") return df
     val cores = spark.sparkContext.defaultParallelism
     if (rows < cores * FloorMinRowsPerCore) return df
     df.repartition(cores, col(key))
@@ -377,22 +350,8 @@ object Tables {
   def part(spark: SparkSession, d: String): DataFrame = table(spark, d, "part")
   def orders(spark: SparkSession, d: String): DataFrame = table(spark, d, "orders")
   def lineitem(spark: SparkSession, d: String): DataFrame = table(spark, d, "lineitem")
-  def documents(spark: SparkSession, d: String): DataFrame =
-    flooredTable(spark, d, "documents", "doc_id")
-  def embeddings(spark: SparkSession, d: String): DataFrame =
-    flooredTable(spark, d, "embeddings", "vec_id")
-
-  /** Floor-REQUESTING variants for operators whose map-side kernels are
-    * CPU-dense enough that the input-conditioning exchange pays for
-    * itself even on a single box (decided per operator by targeted
-    * multi-rep A/B — see `computeFloor`). Identical to the plain
-    * readers under conf "off"/"on"; differ only in the default
-    * "opt-in" mode.
-    */
-  def documentsFloored(spark: SparkSession, d: String): DataFrame =
-    flooredTable(spark, d, "documents", "doc_id", requested = true)
-  def embeddingsFloored(spark: SparkSession, d: String): DataFrame =
-    flooredTable(spark, d, "embeddings", "vec_id", requested = true)
+  def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
+  def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
 
   /** `events` with `ts` normalized to TimestampType (microseconds, UTC
     * session — matching DuckDB's `epoch_us`) and the raw nanos kept as
@@ -409,7 +368,7 @@ object Tables {
     *     already.
     */
   def events(spark: SparkSession, d: String): DataFrame = {
-    val raw = flooredTable(spark, d, "events", "event_id")
+    val raw = table(spark, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         // `div`, not `/`: Long./ is double division, and epoch-nanos

@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
 
+import graft.extract.BulkWriter
 import graft.functions.Transforms
 import graft.model.TableConfig
+import graft.plans.Partition
 
 /** Streaming variant of the extraction sink: entity rows arrive as a
   * file stream (new parquet drops = new block ranges — how a graph-node
   * exporter would land increments); each micro-batch is transformed
   * with the same `convert_columns` core and merged into the SAME
-  * hierarchical partition layout via foreachBatch + dynamic partition
-  * overwrite.
+  * hierarchical partition layout via foreachBatch and
+  * [[graft.extract.BulkWriter.writeTiles]].
   *
   * This is the `Trigger.AvailableNow`/continuous twin of
   * `extract.ExtractPipeline`: the Structured Streaming checkpoint
@@ -68,45 +70,31 @@ object StreamingExtract {
       tableDir: String,
       dedupeKeys: Seq[String]): Unit = {
     val spark = batch.sparkSession
-    val tagged = Transforms.convertColumns(batch, databaseTypes, table)
-      .withColumn("partition_size", lit(tierSize))
-      .withColumn("start_partition",
-        expr(s"(${Transforms.BlockColumn} div $tierSize) * $tierSize"))
-      .withColumn("end_partition", col("start_partition") + tierSize)
-    if (tagged.isEmpty) return
+    val converted = Transforms.convertColumns(batch, databaseTypes, table)
+    if (converted.isEmpty) return
     // merge with the touched partitions' current content (partition
     // pruning limits the read to exactly those directories)
-    val touched = tagged.select("start_partition").distinct()
-      .collect().map(_.getLong(0))
+    val touched = converted
+      .select(expr(s"(${Transforms.BlockColumn} div $tierSize) * $tierSize"))
+      .distinct().collect().map(_.getLong(0)).toSeq
     val existing =
       if (!graft.sinks.Fs.exists(tableDir, spark.sparkContext.hadoopConfiguration))
         None // first batch: no dataset yet
       else Some(spark.read.parquet(tableDir)
-        .withColumn("partition_size", col("partition_size").cast(LongType))
-        .withColumn("start_partition", col("start_partition").cast(LongType))
-        .withColumn("end_partition", col("end_partition").cast(LongType))
         // both keys: a batch-written LARGER tier can share a start value
         // with this stream's tier — filtering on start alone would pull
         // foreign-tier rows into the merge and rewrite (migrate) them
         // into this tier's directories
-        .where(col("partition_size") === tierSize &&
-          col("start_partition").isin(touched.toIndexedSeq: _*))
-        .select(tagged.columns.map(col).toIndexedSeq: _*))
-    val merged = existing.fold(tagged)(tagged.unionByName(_))
+        .where(col(BulkWriter.SizeCol).cast(LongType) === tierSize &&
+          col(BulkWriter.StartCol).cast(LongType).isin(touched: _*))
+        .select(converted.columns.map(col).toIndexedSeq: _*))
+    val merged = existing.fold(converted)(converted.unionByName(_))
       .dropDuplicates(dedupeKeys :+ Transforms.BlockColumn)
       // Spark refuses to overwrite a path present in the read lineage;
       // the micro-batch-sized localCheckpoint materializes the merge
       // and severs the scan of tableDir before the overwrite.
       .localCheckpoint(true)
-    merged
-      .repartition(col("start_partition"))
-      // sort must lead with every partitionBy column or FileFormatWriter
-      // re-sorts (unstably) on the partition keys alone
-      .sortWithinPartitions("partition_size", "start_partition",
-        "end_partition", Transforms.BlockColumn)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("partition_size", "start_partition", "end_partition")
-      .parquet(tableDir)
+    BulkWriter.writeTiles(spark, merged, Transforms.BlockColumn,
+      touched.map(s => Partition(tierSize, s, s + tierSize)), tableDir): Unit
   }
 }

@@ -134,4 +134,25 @@ class BulkScaleSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(Partitioner.partitionDir(tDir, aligned))
       .select("v").as[String].collect().toSeq === Seq("kept"))
   }
+
+  test("a write job that fails leaves every work tile as it was") {
+    // a streamed batch merges into its tiles' old rows, which its replay
+    // cannot re-derive: a failed write must not have cleared them
+    import spark.implicits._
+    val tDir = Files.createTempDirectory("bulk-failed").toString
+    val work = Seq(
+      graft.plans.Partition(64L, 0L, 64L),
+      graft.plans.Partition(64L, 64L, 128L))
+    Seq((10L, "old-a")).toDF("k", "v")
+      .write.parquet(Partitioner.partitionDir(tDir, work(0)))
+    Seq((70L, "old-b")).toDF("k", "v")
+      .write.parquet(Partitioner.partitionDir(tDir, work(1)))
+    val failing = spark.range(0L, 128L).select(col("id").as("k"),
+      expr("if(id >= 100, raise_error('boom'), cast(id as string))").as("v"))
+    intercept[Exception](BulkWriter.writeTiles(spark, failing, "k", work, tDir))
+    assert(spark.read.parquet(Partitioner.partitionDir(tDir, work(0)))
+      .select("v").as[String].collect().toSeq === Seq("old-a"))
+    assert(spark.read.parquet(Partitioner.partitionDir(tDir, work(1)))
+      .select("v").as[String].collect().toSeq === Seq("old-b"))
+  }
 }

@@ -15,7 +15,9 @@ import graft.{JobCounter, SparkTestBase}
   * execute against genuine Postgres in PostgresSqlContractSpec — but the
   * information_schema methods run verbatim here, which exercises the
   * url/driver wiring and the positional row mappings that no string
-  * assertion can, and the striping test runs Spark's JDBC scan.
+  * assertion can; the catalog's row mapping runs over a Derby query
+  * with the catalog SQL's column order, and the striping test runs
+  * Spark's JDBC scan.
   */
 class DerbyJdbcSmokeSpec extends AnyFunSuite with SparkTestBase
     with BeforeAndAfterAll {
@@ -52,6 +54,14 @@ class DerbyJdbcSmokeSpec extends AnyFunSuite with SparkTestBase
         .foreach { case (s, t, c, dt) =>
           st.execute(s"INSERT INTO information_schema.columns VALUES ('$s', '$t', '$c', '$dt')")
         }
+      // catalogSql's joined columns, flattened into one table (Derby
+      // cannot parse the pinned `::bigint` casts)
+      st.execute("""CREATE TABLE catalog_rows (subgraph_name VARCHAR(64),
+        deployment VARCHAR(64), schema_name VARCHAR(64), network VARCHAR(64),
+        earliest BIGINT, latest BIGINT)""")
+      st.execute("""INSERT INTO catalog_rows VALUES
+        ('my_subgraph', 'QmDeployment', 'sgd7', 'mainnet', 5000000000, 5000000123),
+        ('other', 'QmOther', 'sgd8', 'xdai', 1, 2)""")
       st.execute("CREATE TABLE nums (bn BIGINT, v VARCHAR(8))")
       (0 until 100).foreach(i =>
         st.execute(s"INSERT INTO nums VALUES ($i, 'v$i')"))
@@ -68,6 +78,21 @@ class DerbyJdbcSmokeSpec extends AnyFunSuite with SparkTestBase
   test("columnTypes executes the pinned SQL over JDBC") {
     assert(source.columnTypes(spark, "sgd1", "swaps") ===
       Map("vid" -> "bigint", "block_range" -> "int4range", "amount" -> "numeric"))
+  }
+
+  test("catalogRow maps catalogSql's columns by position") {
+    val conn = DriverManager.getConnection(url)
+    val rows = try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT subgraph_name, deployment, schema_name, network, earliest, latest
+          |FROM catalog_rows ORDER BY subgraph_name""".stripMargin)
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(JdbcEntitySource.catalogRow).toVector
+    } finally conn.close()
+    assert(rows === Vector(
+      "my_subgraph" -> CatalogEntry("my_subgraph", "QmDeployment", "sgd7",
+        "mainnet", 5000000000L, 5000000123L),
+      "other" -> CatalogEntry("other", "QmOther", "sgd8", "xdai", 1L, 2L)))
   }
 
   test("tableNames and columnTypes start no Spark job") {

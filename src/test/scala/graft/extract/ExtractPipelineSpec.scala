@@ -300,37 +300,69 @@ class ExtractPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(r2.tables.head.written.nonEmpty)
     val incrPaths = MetadataSink.fragmentPaths(tableDir(out), conf)
     val incrRows = MetadataSink.rowCountFromMetadata(tableDir(out), conf)
-    // rebuild from scratch over the same plan and compare
+    // rebuild from scratch over the same plan and compare: with no
+    // `_metadata`, every plan partition is read fresh, whatever was written
     val fullPlan = Partitioner.plan(GraphNodeFixture.EarliestBlock, FullLatest, Tiers)
-    MetadataSink.writeMetadata(tableDir(out), fullPlan, conf)
+    Fs.delete(s"${tableDir(out)}/_metadata", conf)
+    MetadataSink.writeMetadata(tableDir(out), fullPlan, Nil, conf)
     assert(MetadataSink.fragmentPaths(tableDir(out), conf) === incrPaths)
     assert(MetadataSink.rowCountFromMetadata(tableDir(out), conf) === incrRows)
     assert(incrRows === 6)
   }
 
   test("concurrent table extraction matches sequential output") {
-    val extra = Seq("table_b", "table_c")
-    val mk = (sizes: Seq[Long]) => ExtractConfig(
+    // the 3-table run extracts its tables concurrently; each 1-table run
+    // has its table to itself, so together they are the sequential run
+    val tables = (Table +: Seq("table_b", "table_c")).sorted
+    val mk = (ts: Seq[String]) => ExtractConfig(
       name = "my_extract_name", version = "0.0.1", subgraph = Subgraph,
-      tables = (Table +: extra).map(_ -> TableConfig(sizes)).toMap)
-    val src = tmp(); val outSeq = tmp(); val outPar = tmp()
-    GraphNodeFixture.write(spark, src, FullLatest, extraTables = extra)
-    val rSeq = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      mk(Tiers), outSeq, 1L, tableParallelism = 1)
+      tables = ts.map(_ -> TableConfig(Tiers)).toMap)
+    val src = tmp(); val outPar = tmp()
+    GraphNodeFixture.write(spark, src, FullLatest,
+      extraTables = tables.filterNot(_ == Table))
+    val rSeq = tables.map(t => ExtractPipeline.extract(spark,
+      new ParquetEntitySource(src), mk(Seq(t)), tmp(), 1L))
     val rPar = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
-      mk(Tiers), outPar, 1L, tableParallelism = 3)
+      mk(tables), outPar, 1L)
     // deterministic result order (table name) and identical plans
-    assert(rSeq.tables.map(_.table) === (Table +: extra).sorted)
-    assert(rPar.tables.map(_.table) === rSeq.tables.map(_.table))
-    assert(rPar.tables.map(t => t.table -> t.written) ===
-      rSeq.tables.map(t => t.table -> t.written))
-    assert(rPar.watermark === rSeq.watermark.copy(updatedEpochMillis =
-      rPar.watermark.updatedEpochMillis))
+    assert(rPar.tables.map(_.table) === tables)
+    assert(rPar.tables === rSeq.flatMap(_.tables))
+    rSeq.foreach(r => assert(rPar.watermark === r.watermark))
     // every table dir readable with the full 6 rows
-    (Table +: extra).foreach { t =>
+    tables.foreach { t =>
       val dir = Partitioner.tableDir(s"$outPar/my_extract_name/0.0.1", Subgraph, t)
       assert(spark.read.parquet(dir).count() === 6)
     }
+  }
+
+  test("a failed _metadata step leaves the superseded partitions in place") {
+    // run 1's 32768-tier head partitions are superseded by run 2's
+    // [18874368, 19398656) 524288-tier partition
+    val src = tmp(); val out = tmp()
+    val conf = spark.sparkContext.hadoopConfiguration
+    GraphNodeFixture.write(spark, src, FullLatest)
+    val r1 = ExtractPipeline.extract(spark, new ParquetEntitySource(src),
+      config(), out, 1L)
+    val small = r1.tables.head.written.filter(_.size == Tiers.last)
+    assert(small.nonEmpty)
+    // run 2's `_metadata` step fails: the file is now a directory
+    val meta = s"${tableDir(out)}/_metadata"
+    Fs.delete(meta, conf)
+    Fs.writeString(s"$meta/blocker", "", conf)
+    GraphNodeFixture.write(spark, src, 19400000L)
+    intercept[Exception](ExtractPipeline.extract(spark,
+      new ParquetEntitySource(src), config(), out, 2L))
+    small.foreach { p =>
+      assert(Fs.exists(Partitioner.partitionDir(tableDir(out), p), conf),
+        s"superseded partition $p pruned before `_metadata` was written")
+    }
+    // the re-run writes `_metadata` and then prunes
+    Fs.delete(meta, conf)
+    ExtractPipeline.extract(spark, new ParquetEntitySource(src), config(), out, 3L)
+    small.foreach(p =>
+      assert(!Fs.exists(Partitioner.partitionDir(tableDir(out), p), conf)))
+    assert(MetadataSink.rowCountFromMetadata(tableDir(out), conf) === 6)
+    assert(spark.read.parquet(tableDir(out)).count() === 6)
   }
 
   test("config drift aborts (K4)") {

@@ -16,33 +16,13 @@ import graft.SparkTestBase
   * otherwise alarming), so pin it here: if a future Spark version or a
   * query edit drops the bound, this fails instead of the cluster.
   */
-class PlanContractSpec extends AnyFunSuite with SparkTestBase
-    with org.scalatest.BeforeAndAfterAll {
+class PlanContractSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  // These contracts pin each OPERATOR's exchange shape. The compute-
-  // parallelism floor (graft.sources.Tables.computeFloor, an opt-in
-  // session knob) would add one input-conditioning hash exchange on
-  // small-split fixtures, so it is pinned off here regardless of the
-  // session's setting — TablesFloorSpec pins the floor's own plan
-  // behavior, including that pushdown and pruning survive it.
-  // restore the PRIOR session value, not a hardcoded default: with
-  // SPARK_GRAFT_COMPUTE_FLOOR set for the shared test session, suites
-  // running after this one must see the configured mode, not "opt-in"
-  private var priorFloor: Option[String] = None
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    priorFloor = spark.conf.getOption("spark.graft.computeFloor")
-    spark.conf.set("spark.graft.computeFloor", "off")
-  }
-  override protected def afterAll(): Unit = {
-    priorFloor match {
-      case Some(v) => spark.conf.set("spark.graft.computeFloor", v)
-      case None => spark.conf.unset("spark.graft.computeFloor")
-    }
-    super.afterAll()
-  }
+  // Plain readers never add an input-conditioning exchange (only
+  // Tables.documentsFloored does, pinned by TablesFloorSpec), so these
+  // plans show each operator's own exchanges.
 
   private def stripAqe(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => stripAqe(a.executedPlan)

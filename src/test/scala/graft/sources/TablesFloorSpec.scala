@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Pins the compute-parallelism floor (`Tables.flooredTable`):
+/** Pins the compute-parallelism floor (`Tables.documentsFloored`):
   *
   *   1. a one-row-group fixture gets ONE hash exchange on the row key
   *      (the floor), and scan pushdown is UNAFFECTED by it — the filter
@@ -16,31 +16,9 @@ import graft.SparkTestBase
   *      hash-on-key, so a downstream groupBy on the same key can reuse
   *      the exchange instead of adding a second one.
   */
-class TablesFloorSpec extends AnyFunSuite with SparkTestBase
-    with org.scalatest.BeforeAndAfterAll {
+class TablesFloorSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
-
-  // The floor fires only for requesting call sites by default (mode
-  // "opt-in", set after the r14 full-surface A/B — see
-  // Tables.computeFloor); these tests pin the behavior in mode "on",
-  // then restore the default.
-  // restore the PRIOR session value, not a hardcoded default: with
-  // SPARK_GRAFT_COMPUTE_FLOOR set for the shared test session, suites
-  // running after this one must see the configured mode, not "opt-in"
-  private var priorFloor: Option[String] = None
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    priorFloor = spark.conf.getOption("spark.graft.computeFloor")
-    spark.conf.set("spark.graft.computeFloor", "on")
-  }
-  override protected def afterAll(): Unit = {
-    priorFloor match {
-      case Some(v) => spark.conf.set("spark.graft.computeFloor", v)
-      case None => spark.conf.unset("spark.graft.computeFloor")
-    }
-    super.afterAll()
-  }
 
   test("batch floor widens a big micro-batch and skips a trickle") {
     val cores = spark.sparkContext.defaultParallelism
@@ -53,31 +31,24 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
     val kept = Tables.computeFloorForBatch(spark, trickle, "doc_id", trickleRows)
     assert(kept.rdd.getNumPartitions === 1,
       "trickle batch below the rows-per-core guard must not be exchanged")
-    spark.conf.set("spark.graft.computeFloor", "off")
-    try {
-      val off = Tables.computeFloorForBatch(spark,
-        spark.range(10).toDF("doc_id").coalesce(1), "doc_id",
-        rows = cores * Tables.FloorMinRowsPerCore)
-      assert(off.rdd.getNumPartitions === 1, "mode off must disable the batch floor")
-    } finally spark.conf.set("spark.graft.computeFloor", "on")
   }
 
-  test("plain readers do not floor in the default opt-in mode") {
-    spark.conf.set("spark.graft.computeFloor", "opt-in")
-    try {
-      val plain = Tables.documents(spark, sf)
-        .select("doc_id").queryExecution.executedPlan.toString
-      assert(!plain.contains("hashpartitioning(doc_id"),
-        s"plain reader floored in opt-in mode:\n$plain")
-      val req = Tables.documentsFloored(spark, sf)
-        .select("doc_id").queryExecution.executedPlan.toString
-      assert(req.contains("hashpartitioning(doc_id"),
-        s"requesting reader did not floor in opt-in mode:\n$req")
-    } finally spark.conf.set("spark.graft.computeFloor", "on")
+  test("plain readers never floor; documentsFloored does") {
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    Seq(Tables.documents(spark, sf).select("doc_id"),
+        Tables.embeddings(spark, sf).select("vec_id"),
+        Tables.events(spark, sf).select("event_id")).foreach { df =>
+      assert(!plan(df).contains("hashpartitioning("),
+        s"plain reader floored:\n${plan(df)}")
+    }
+    val req = plan(Tables.documentsFloored(spark, sf).select("doc_id"))
+    assert(req.contains("hashpartitioning(doc_id"),
+      s"documentsFloored did not floor:\n$req")
   }
 
   test("floored read keeps filter pushdown and column pruning at the scan") {
-    val plan = Tables.documents(spark, sf)
+    val plan = Tables.documentsFloored(spark, sf)
       .where(col("doc_id") >= 10 && col("doc_id") < 40)
       .select("doc_id", "n_chars")
       .queryExecution.executedPlan.toString
@@ -92,7 +63,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("floor widens a one-row-group scan to defaultParallelism") {
-    val df = Tables.documents(spark, sf).select("doc_id")
+    val df = Tables.documentsFloored(spark, sf).select("doc_id")
     assert(df.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
   }
 
@@ -102,7 +73,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
     Tables.documents(spark, sf)
       .repartition(cores)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val plan = Tables.documents(spark, dir)
+    val plan = Tables.documentsFloored(spark, dir)
       .select("doc_id").queryExecution.executedPlan.toString
     assert(!plan.contains("hashpartitioning(doc_id"),
       s"floor fired on a ${cores}-file input:\n$plan")
@@ -113,7 +84,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
     val dir = java.nio.file.Files.createTempDirectory("floor-rewrite").toString
     val src = Tables.documents(spark, sf)
     src.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val before = Tables.documents(spark, dir).select("doc_id")
+    val before = Tables.documentsFloored(spark, dir).select("doc_id")
       .queryExecution.executedPlan.toString
     assert(before.contains("hashpartitioning(doc_id"),
       s"one-file table must floor:\n$before")
@@ -121,7 +92,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
     // the row-group memo is keyed by the listing signature, not path
     src.repartition(cores).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    val after = Tables.documents(spark, dir).select("doc_id")
+    val after = Tables.documentsFloored(spark, dir).select("doc_id")
       .queryExecution.executedPlan.toString
     assert(!after.contains("hashpartitioning(doc_id"),
       s"stale row-group memo: floor fired on the rewritten $cores-file table:\n$after")
@@ -138,7 +109,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
     java.nio.file.Files.createDirectories(tmp)
     java.nio.file.Files.write(tmp.resolve("part-00000-junk.snappy.parquet"),
       Array[Byte](1, 2, 3))
-    val plan = Tables.documents(spark, dir).select("doc_id")
+    val plan = Tables.documentsFloored(spark, dir).select("doc_id")
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(doc_id"),
       s"floor decision disturbed by hidden debris:\n$plan")
@@ -159,7 +130,7 @@ class TablesFloorSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("downstream groupBy on the floor key reuses the exchange") {
-    val plan = Tables.documents(spark, sf)
+    val plan = Tables.documentsFloored(spark, sf)
       .groupBy("doc_id").agg(sum("n_chars"))
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning\\(doc_id".r

@@ -5,39 +5,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** Pins the reader's shuffle-width ratchet (`Tables.widthRatchet`):
-  * volume raises the AQE initial width, nothing ever lowers it, the
+  * volume raises the AQE initial width, nothing ever lowers it, and the
   * default byte budget is a guaranteed no-op on small fixtures (the
-  * graded bench and the frozen canaries must never see it fire), and
-  * the off knob restores engine behavior.
+  * graded bench and the frozen canaries must never see it fire). Each
+  * case runs inside `Tables.widthScoped`, so the shared session leaves
+  * it with the ratchet confs it entered with.
   */
 class TablesWidthSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
+  private val lineitem = s"$sf/lineitem.parquet"
   private val Key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
   private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
-  private def withRestored(body: => Unit): Unit = {
-    val priorKey = spark.conf.getOption(Key)
-    val priorAdvisory = spark.conf.getOption(Advisory)
-    val priorBudget =
-      spark.conf.getOption("spark.graft.shuffleWidthBytesPerPartition")
-    val priorMode = spark.conf.getOption("spark.graft.shuffleWidthRatchet")
-    try body
-    finally {
-      def put(k: String, v: Option[String]): Unit = v match {
-        case Some(x) => spark.conf.set(k, x)
-        case None => spark.conf.unset(k)
-      }
-      put(Key, priorKey)
-      put(Advisory, priorAdvisory)
-      put("spark.graft.shuffleWidthBytesPerPartition", priorBudget)
-      put("spark.graft.shuffleWidthRatchet", priorMode)
-    }
-  }
-
   test("default budget never fires on small fixtures") {
-    withRestored {
+    Tables.widthScoped(spark) {
       val w = spark.sessionState.conf.numShufflePartitions
       spark.conf.set(Key, w.toString)
       spark.conf.set(Advisory, "64m")
@@ -50,14 +33,14 @@ class TablesWidthSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("widthScoped restores the ratchet confs after the query") {
-    withRestored {
+    Tables.widthScoped(spark) {
       val w = spark.sessionState.conf.numShufflePartitions
       spark.conf.set(Key, w.toString)
       spark.conf.set(Advisory, "64m")
-      spark.conf.set("spark.graft.shuffleWidthBytesPerPartition", "1024")
       var inScope = 0
       Tables.widthScoped(spark) {
-        Tables.table(spark, sf, "lineitem")
+        // a 1-KiB budget makes even the tiny fixture read as "volume"
+        Tables.widthRatchet(spark, lineitem, bytesPerPartition = 1024)
         inScope = spark.conf.get(Key).toInt
       }
       assert(inScope > w, "ratchet must fire INSIDE the scope")
@@ -69,17 +52,15 @@ class TablesWidthSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("volume raises the AQE initial width; never lowers; off disables") {
-    withRestored {
+  test("volume raises the AQE initial width; never lowers") {
+    Tables.widthScoped(spark) {
       val w = spark.sessionState.conf.numShufflePartitions
       spark.conf.set(Key, w.toString)
       // a 1-KiB budget makes even the tiny fixture read as "volume"
-      spark.conf.set("spark.graft.shuffleWidthBytesPerPartition", "1024")
-      Tables.table(spark, sf, "lineitem")
+      Tables.widthRatchet(spark, lineitem, bytesPerPartition = 1024)
       val raised = spark.conf.get(Key).toInt
       assert(raised > w, s"expected a raise past $w, conf reads $raised")
-      val bytes = java.nio.file.Files.size(
-        java.nio.file.Paths.get(s"$sf/lineitem.parquet"))
+      val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(lineitem))
       val want = math.min(math.ceil(bytes / 1024.0).toLong, 4096L).toInt
       assert(raised === want, s"raise must be bytes/budget capped at 4096")
       // a fired ratchet also lowers the AQE advisory target, so
@@ -88,17 +69,9 @@ class TablesWidthSpec extends AnyFunSuite with SparkTestBase {
       assert(spark.conf.get(Advisory) === (16L << 20).toString,
         "fired ratchet must lower the coalesce advisory to 16m")
       // a LESS demanding read must not lower the ratchet
-      spark.conf.set("spark.graft.shuffleWidthBytesPerPartition",
-        (64L << 20).toString)
-      Tables.table(spark, sf, "lineitem")
+      Tables.widthRatchet(spark, lineitem, bytesPerPartition = 64L << 20)
       assert(spark.conf.get(Key).toInt === raised,
         "ratchet lowered the width — it must only ever lift the ceiling")
-      // off restores engine behavior entirely
-      spark.conf.set(Key, w.toString)
-      spark.conf.set("spark.graft.shuffleWidthRatchet", "off")
-      spark.conf.set("spark.graft.shuffleWidthBytesPerPartition", "1024")
-      Tables.table(spark, sf, "lineitem")
-      assert(spark.conf.get(Key).toInt === w, "off mode must not touch conf")
     }
   }
 }
