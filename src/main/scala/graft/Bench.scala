@@ -116,7 +116,7 @@ object Bench {
             false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      Sessions.releaseCaches(spark)
       if (ok) Some(dt) else None
     }
     // local-iteration escape hatch: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times
@@ -138,7 +138,7 @@ object Bench {
         planningSeconds(fn(spark, sfDir))
       }
     }
-    spark.catalog.clearCache()
+    Sessions.releaseCaches(spark)
     val passes: Seq[Map[String, Option[Double]]] = (1 to reps).map { _ =>
       names.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
     }

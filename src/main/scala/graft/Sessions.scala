@@ -47,4 +47,16 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Release every cache a query left behind: the catalog's cached
+    * plans, then a blocking unpersist of every persisted RDD, which
+    * also drops the `localCheckpoint` blocks the cache manager does not
+    * track. Runners call it after each query's action (the CACHE
+    * CONTRACT in [[SparkEntry]]); a frame built before the release must
+    * not be read after it.
+    */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
 }

@@ -23,15 +23,14 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * CACHE CONTRACT: several operators persist() and force shared
-    * subframes during query CONSTRUCTION (collapsed funnels, capstone
-    * chains) and deliberately do not unpersist — the caches are the
-    * mechanism by which one logical corpus pass feeds multiple
-    * branches, and releasing them before the caller's final action
-    * would recompute the branch. Runners that execute MANY entries in
-    * one session (Verify, Bench, specs) therefore call
-    * `spark.catalog.clearCache()` between queries; a caller embedding a
-    * single query owns the same release.
+    * CACHE CONTRACT: a builder may pin intermediates (persist, local
+    * checkpoints) that its plan reads in more than one branch, and
+    * returns a LAZY frame: building it runs only the jobs a plan
+    * decision or a driver-side value needs, and the caller's action
+    * runs the query. The runner owns every cache's lifetime: it calls
+    * [[Sessions.releaseCaches]] after each query's action (Verify,
+    * Bench, Sweep, PlanStats, PlanDump). A caller embedding a single
+    * query does the same once it is done with the frame.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ParityQueries.queries ++ TextAnalysis.queries ++ Dedup.queries ++

@@ -38,9 +38,9 @@ object Verify {
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // dedup/similarity queries persist() intermediates for their own
-      // plan reuse; drop them so 45 queries don't stack cached blocks
-      spark.catalog.clearCache()
+      // builders pin intermediates for their own plan reuse; the runner
+      // releases them so queries don't stack cached blocks
+      Sessions.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -125,21 +125,4 @@ object Transforms {
     }
     df.select(originals ++ derived.map { case (n, c) => c.as(n) }: _*)
   }
-
-  /** Infer reference-style database types from a parquet schema, for
-    * sources where no information_schema exists (decimal-carried numerics
-    * are the uint256 candidates).
-    */
-  def databaseTypesFromSchema(schema: StructType): Map[String, String] =
-    schema.fields.map { f =>
-      f.name -> (f.dataType match {
-        case _: DecimalType => "numeric"
-        case StringType     => "text"
-        case BooleanType    => "boolean"
-        case BinaryType     => "bytea"
-        case IntegerType    => "integer"
-        case LongType       => "bigint"
-        case other          => other.simpleString
-      })
-    }.toMap
 }

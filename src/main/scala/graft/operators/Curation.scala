@@ -931,9 +931,6 @@ object Curation {
     * short to yield a shingle still appear with n = 0 (empty-empty
     * pairs define jaccard as 0 — guarded, DuckDB's `// 0` errors), so
     * the matrix is total over the corpus's sources.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def sourceOverlap(spark: SparkSession, d: String): DataFrame = {
     import graft.functions.GraftFunctions
@@ -959,7 +956,7 @@ object Curation {
     // explicit broadcast: sz is |sources|-sized but is a join RESULT, so
     // its size estimate can exceed the nested-loop threshold and degrade
     // the non-equi pair join to a CartesianProduct (plan-pinned against)
-    val out = sz.toDF("source_a", "n_a")
+    sz.toDF("source_a", "n_a")
       .join(broadcast(sz.toDF("source_b", "n_b")),
         col("source_a") < col("source_b"))
       .join(inter, Seq("source_a", "source_b"), "left")
@@ -973,10 +970,6 @@ object Curation {
                |  div (n_a + n_b - coalesce(n_common, 0L)) END""".stripMargin)
           .as("jaccard_e6"))
       .orderBy("source_a", "source_b")
-      .persist()
-    out.count() // materialize so the shingle-set cache can be released
-    s.unpersist()
-    out
   }
 
   val sourceOverlapSql: String = {
@@ -1069,10 +1062,6 @@ object Curation {
        |  div (cast(c_raw + 1 as decimal(38,0)) * (n_tgt + $buckets)) as bigint)"""
       .stripMargin
 
-  /** Returned frame is its own persisted lineage root — the CALLER owns
-    * the release (`unpersist()` when done; the verify/bench harnesses
-    * clearCache between queries).
-    */
   def dsirWeights(spark: SparkSession, d: String,
       buckets: Int = DefaultDsirBuckets,
       targetLang: String = DefaultDsirTargetLang): DataFrame = {
@@ -1083,24 +1072,17 @@ object Curation {
       sum("c_raw").as("n_raw"), sum("c_tgt").as("n_tgt"))
     val model = byBucket.crossJoin(broadcast(tot))
       .select(col("bucket"), expr(dsirRatioExpr(buckets)).as("ratio_e6"))
-    val out = b.join(broadcast(model), Seq("bucket"))
+    b.join(broadcast(model), Seq("bucket"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_toks"),
         expr("sum(ratio_e6) div count(1)").as("w_e6"))
       .orderBy("doc_id")
-      .persist()
-    out.count() // materialize so the exploded-corpus cache can be released
-    b.unpersist()
-    out
   }
 
   /** The DSIR model as ONE broadcastable row: the bucket→ratio map plus
     * the smoothing-floor default for buckets never seen in the fit
     * (c_raw = c_tgt = 0 ⇒ ratio = (N_raw+B)·10^6 div (N_tgt+B)) — the
     * artifact [[dsirScoreFrames]] applies at ingest.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def dsirModelRow(docs: DataFrame,
       buckets: Int = DefaultDsirBuckets,
@@ -1113,7 +1095,7 @@ object Curation {
       dsirExplode(docs, buckets, targetLang)).persist()
     val tot = byBucket.agg(
       sum("c_raw").as("n_raw"), sum("c_tgt").as("n_tgt"))
-    val out = byBucket.crossJoin(broadcast(tot))
+    byBucket.crossJoin(broadcast(tot))
       .select(col("bucket"), expr(dsirRatioExpr(buckets)).as("ratio_e6"))
       .agg(map_from_entries(collect_list(struct(col("bucket"), col("ratio_e6"))))
         .as("m"))
@@ -1121,10 +1103,6 @@ object Curation {
         s"""cast(cast(n_raw + $buckets as decimal(38,0)) * 1000000
            |  div (n_tgt + $buckets) as bigint)""".stripMargin)
         .as("default_ratio_e6"))))
-      .persist()
-    out.count() // materialize so the bucket-partials cache can be released
-    byBucket.unpersist()
-    out
   }
 
   /** STATELESS application of the DSIR model: each document scores
@@ -1509,8 +1487,7 @@ object Curation {
     * k-means/BPE collect discipline: model-sized scalars only).
     */
   /** The centered integer feature frame shared by [[lrTrain]] and
-    * [[lrScore]]: (doc_id, y, x0..x4), persisted and forced; the
-    * caller unpersists.
+    * [[lrScore]]: (doc_id, y, x0..x4), persisted and forced.
     */
   private def lrFeatures(spark: SparkSession, d: String): (DataFrame, Long) = {
     import graft.functions.GraftFunctions
@@ -1619,7 +1596,7 @@ object Curation {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val (feats, n) = lrFeatures(spark, d)
     val w = lrRounds(feats, n, iterations).last
-    val out = feats.select(
+    feats.select(
       col("doc_id"), col("y"),
       expr(lrDot(w)).as("s_e4"))
       .select(col("doc_id"), col("y"), col("s_e4"),
@@ -1627,10 +1604,6 @@ object Curation {
         expr("CASE WHEN s_e4 >= 0L THEN 1L ELSE 0L END").as("predicted"))
       .withColumn("correct", col("predicted") === col("y"))
       .orderBy("doc_id")
-      .persist()
-    out.count() // materialize before the feature cache drops
-    feats.unpersist()
-    out
   }
 
   /** Oracle twin: the identical training rounds unrolled as chained

@@ -1269,18 +1269,6 @@ object Dedup {
       "within_3")
   }
 
-  /** The cluster capstones' candidate→verify input over canonical reps:
-    * persisted shingle-set and signature frames plus the LSH candidate
-    * pairs joined with BOTH sides' sets. Callers own the caches'
-    * release.
-    */
-  private def candidatePairSets(reps: DataFrame,
-      numHashes: Int, numBands: Int): (DataFrame, DataFrame, DataFrame) = {
-    val sets = shingleSets(reps).persist()
-    val sigs = signaturesOver(reps, numHashes).persist()
-    (sets, sigs, joinSides(candidatePairs(sigs, numHashes, numBands), sets, "sset", "set"))
-  }
-
   /** Exact-duplicate COLLAPSE prelude for the cluster capstones — the
     * round-7 scale study's production mitigation, composed in. Returns a
     * persisted (doc_id, gid, text) frame where `gid` is the doc's
@@ -1316,21 +1304,6 @@ object Dedup {
       .withColumn("gid", min("doc_id").over(Window.partitionBy("ch")))
       .select("doc_id", "gid", "text")
       .persist()
-  }
-
-  /** [[exactCollapse]] without the text column, for consumers that only
-    * need the (doc_id, gid) membership: the window exchange then moves
-    * 16-byte rows plus the hash instead of full document text — at the
-    * 1000× replica that is the difference between shuffling ~100 MB and
-    * shuffling the corpus. NOT persisted (one consumer, one pass).
-    */
-  private[operators] def exactMembership(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Tables.documents(spark, d)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.content_hash(col("text")).as("ch"))
-      .withColumn("gid", min("doc_id").over(Window.partitionBy("ch")))
-      .select("doc_id", "gid")
   }
 
   /** Member-pair CENSUS over a collapsed funnel, counted WITHOUT
@@ -1963,21 +1936,12 @@ object Dedup {
       numHashes: Int = DefaultNumHashes,
       numBands: Int = DefaultNumBands,
       maxIters: Int = 50): DataFrame = {
-    // the collapse's output-equivalence proof needs exact dups to qualify
-    // as near-dups (Jaccard of identical sets is exactly 10000)
-    require(minJaccardE4 <= 10000L,
-      s"minJaccardE4 must be <= 10000 for the exact-collapse prelude, got $minJaccardE4")
-    val collapsed = exactCollapse(spark, d)
-    val (sets, sigs, joined) =
-      candidatePairSets(canonicalReps(collapsed), numHashes, numBands)
-    val verified = joined
-      .where(graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
-        >= minJaccardE4)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = verified.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(verified.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val (membership, nodes, verified) =
+      verifiedEdges(spark, d, minJaccardE4, numHashes, numBands)
+    val edges = verified.select(col("ga").as("src"), col("gb").as("dst"))
+      .union(verified.select(col("gb").as("src"), col("ga").as("dst")))
       .persist()
-    var labels = sets.select(col("doc_id"), col("doc_id").as("label")).persist()
+    var labels = nodes.select(col("gid").as("doc_id"), col("gid").as("label")).persist()
     // convergence by LABEL-SUM: every round takes min(own ∪ neighbors),
     // so labels are monotone non-increasing and the sum strictly
     // decreases until fixpoint — an unchanged sum PROVES convergence
@@ -2015,25 +1979,36 @@ object Dedup {
       it += 1
     }
     require(converged, s"label propagation did not converge in $maxIters rounds")
-    // expand canonical labels back to every exact-dup member: a member's
-    // cluster_rep is its gid's label (identical by the equivalence proof
-    // on exactCollapse); groups whose canonical has no shingles drop out
-    // of the inner join, matching the uncollapsed output's domain
-    val out = collapsed.select(col("doc_id"), col("gid"))
-      .join(labels.select(col("doc_id").as("gid"), col("label")), "gid")
-      .select(col("doc_id"), col("label").as("cluster_rep"))
-      .orderBy("doc_id")
-      .persist()
-    // materialize the (tiny) expanded label frame, then release every
-    // intermediate — only the result's own cache stays pinned
-    out.count()
-    sets.unpersist()
-    sigs.unpersist()
-    edges.unpersist()
-    labels.unpersist()
-    collapsed.unpersist()
-    out
+    expandLabels(membership,
+      labels.select(col("doc_id").as("gid"), col("label").as("cluster_rep")))
   }
+
+  /** The cluster capstones' graph over canonical reps, from
+    * [[ngramJaccardFunnel]]: (membership, nodes (gid) = the reps with
+    * shingles, verified canonical edges (ga < gb) at Jaccard >=
+    * `minJaccardE4`).
+    */
+  private def verifiedEdges(spark: SparkSession, d: String, minJaccardE4: Long,
+      numHashes: Int, numBands: Int): Funnel = {
+    // the collapse's output-equivalence proof needs exact dups to qualify
+    // as near-dups (Jaccard of identical sets is exactly 10000)
+    require(minJaccardE4 <= 10000L,
+      s"minJaccardE4 must be <= 10000 for the exact-collapse prelude, got $minJaccardE4")
+    val (membership, elig, pj) = ngramJaccardFunnel(spark, d, numHashes, numBands)
+    (membership, elig, pj.where(col("jaccard_e4") >= minJaccardE4))
+  }
+
+  /** Expand canonical labels (gid, cluster_rep) back to every exact-dup
+    * member: a member's cluster_rep is its gid's label (identical by the
+    * equivalence proof on [[exactCollapse]]); groups whose canonical has
+    * no shingles drop out of the inner join, matching the uncollapsed
+    * output's domain.
+    */
+  private def expandLabels(membership: DataFrame, labels: DataFrame): DataFrame =
+    membership.select(col("doc_id"), col("gid"))
+      .join(labels, "gid")
+      .select(col("doc_id"), col("cluster_rep"))
+      .orderBy("doc_id")
 
   /** Both directions of an edge list. Single-branch explode rather than a
     * self-union: a union references the input subtree twice, and when that
@@ -2096,17 +2071,11 @@ object Dedup {
       maxIters: Int = 30): DataFrame = {
     // same exact-collapse prelude (and equivalence argument) as the
     // label-propagation twin
-    require(minJaccardE4 <= 10000L,
-      s"minJaccardE4 must be <= 10000 for the exact-collapse prelude, got $minJaccardE4")
-    val collapsed = exactCollapse(spark, d)
-    val (sets, sigs, joined) =
-      candidatePairSets(canonicalReps(collapsed), numHashes, numBands)
-    val verified = joined
-      .where(graft.functions.GraftFunctions.jaccard_e4(col("set_a"), col("set_b"))
-        >= minJaccardE4)
-    // canonical (big, small) orientation; doc_a < doc_b upstream
+    val (membership, nodes, verified) =
+      verifiedEdges(spark, d, minJaccardE4, numHashes, numBands)
+    // canonical (big, small) orientation; ga < gb upstream
     var edges = verified
-      .select(col("doc_b").as("src"), col("doc_a").as("dst")).persist()
+      .select(col("gb").as("src"), col("ga").as("dst")).persist()
     // fixpoint test = (count, xxhash64-sum) fingerprint of the canonical
     // edge set: one cheap aggregate per round instead of two full
     // anti-joins (exceptAll tripled the round cost at 10× scale); a
@@ -2138,25 +2107,9 @@ object Dedup {
     }
     require(converged, s"star contraction did not converge in $maxIters rounds")
     val lab = symmetric(edges).groupBy("src").agg(min("dst").as("mn"))
-      .select(col("src").as("doc_id"), least(col("mn"), col("src")).as("rep"))
-    val canonical = sets.select(col("doc_id"))
-      .join(lab, Seq("doc_id"), "left")
-      .select(col("doc_id").as("gid"),
-        coalesce(col("rep"), col("doc_id")).as("cluster_rep"))
-    val out = collapsed.select(col("doc_id"), col("gid"))
-      .join(canonical, "gid")
-      .select(col("doc_id"), col("cluster_rep"))
-      .orderBy("doc_id")
-      .persist()
-    // same cache discipline as the propagation twin: materialize the
-    // (tiny) label result, then release every intermediate — only the
-    // result's own cache stays pinned for the life of the frame
-    out.count()
-    sets.unpersist()
-    sigs.unpersist()
-    edges.unpersist()
-    collapsed.unpersist()
-    out
+      .select(col("src").as("gid"), least(col("mn"), col("src")).as("rep"))
+    expandLabels(membership, nodes.join(lab, Seq("gid"), "left")
+      .select(col("gid"), coalesce(col("rep"), col("gid")).as("cluster_rep")))
   }
 
   val dedupClustersSql: String =

@@ -300,7 +300,7 @@ object Similarity {
     // does not apply — the two consumers have different subtrees). At
     // corpus scale the same reuse is a one-time materialization of the
     // quantized projection, not a cache (see the CACHE CONTRACT in
-    // SparkEntry: runners clearCache between queries).
+    // SparkEntry: runners release caches between queries).
     val e = emb.select(col("vec_id"),
       graft.functions.GraftFunctions.outlier_stats(col("embedding"), numPlanes)
         .as("os"))
@@ -1113,7 +1113,7 @@ object Similarity {
       .localCheckpoint(true)
     // cls (eager) was memT's only transitive consumer — release the
     // cached membership now instead of letting it sit in the cache
-    // manager until the caller's clearCache
+    // manager until the runner's release
     memT.unpersist()
     // LAZY checkpoint: canonCos below is the next action and materializes
     // (and severs) this group-sized frame inside its own job — the eager
@@ -1195,19 +1195,15 @@ object Similarity {
       .join(canonCos, Seq("ga", "gb"))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard_e4"),
         col("cos_can").as("cos_e6"))
+    // the slow side is fault-mass-sized (small by construction): cached
+    // and counted, so pairCosines sees its true size and broadcasts it
     val slowPairs = expanded.where(!(col("ua") && col("ub")))
       .select("doc_a", "doc_b", "est_jaccard_e4")
       .persist()
     slowPairs.count()
-    // the slow side is fault-mass-sized (small by construction), so it
-    // can materialize eagerly — which lets slowPairs release its cache
-    // here instead of retaining it until the caller's clearCache; the
-    // volume-bound fast side stays lazy
     val slow = slowPairs
       .join(pairCosines(spark, d, slowPairs), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"), col("est_jaccard_e4"), col("cos_e6"))
-      .localCheckpoint(true)
-    slowPairs.unpersist()
     fast.unionByName(slow)
       .withColumn("embeds_agree",
         coalesce(col("cos_e6") >= minCosE6, lit(false)))
@@ -1366,17 +1362,8 @@ object Similarity {
       else fastTouchG.unionByName(slowTouch))
       .distinct()
       .groupBy(kc: _*).agg(sum("csz").as("n_docs"))
-    // the census is key-grid-sized — materialize it eagerly (still
-    // inside the caller's timing window; Bench times the builder) so
-    // the five branch caches can release here rather than accumulate
-    // until clearCache. On the all-uniform fast path the slow branches
-    // were never computed and their unpersist is a no-op.
-    val census = nPairs.join(nDocs, keys)
+    nPairs.join(nDocs, keys)
       .orderBy("est_jaccard_e4", "embeds_agree")
-      .localCheckpoint(true)
-    Seq(fastCross, fastIntra, slowCross, slowIntraSame, slowIntraDiff)
-      .foreach(_.unpersist())
-    census
   }
 
   val crossmodalAuditPairsSql: String =
@@ -1506,16 +1493,13 @@ object Similarity {
       .where(col("cos_e6") >= minCosE6)
       .withColumn("cos_band", expr("cos_e6 div 100000"))
       // two consumers (pair counts, doc counts) — share one candidate
-      // enumeration; the harnesses clearCache between queries
+      // enumeration
       .persist()
     val p = pairs.groupBy("cos_band").agg(count(lit(1)).as("n_pairs"))
     val dd = pairs.select(col("cos_band"), col("vec_a").as("vec_id"))
       .unionAll(pairs.select(col("cos_band"), col("vec_b").as("vec_id")))
       .groupBy("cos_band").agg(countDistinct("vec_id").as("n_docs"))
-    val out = p.join(dd, Seq("cos_band")).orderBy("cos_band").persist()
-    out.count() // materialize so the pair cache can be released
-    pairs.unpersist()
-    out
+    p.join(dd, Seq("cos_band")).orderBy("cos_band")
   }
 
   val dedupEmbeddingCensusSql: String =
@@ -1549,9 +1533,6 @@ object Similarity {
     * the mutuality check is a self-join of the top-k frame on the
     * REVERSED key — |topk| = n·k rows, so both sides are slim; the
     * frame is persisted so its two appearances share one computation.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def knnGraph(spark: SparkSession, d: String, k: Int = 3,
       numPlanes: Int = AutoPlanes): DataFrame = {
@@ -1567,16 +1548,12 @@ object Similarity {
       .where(col("rank") <= k)
       .select("src", "dst", "cos_e6")
       .persist()
-    val out = topk.as("x").join(topk.as("y"),
+    topk.as("x").join(topk.as("y"),
         col("x.src") === col("y.dst") && col("x.dst") === col("y.src"))
       .where(col("x.src") < col("x.dst"))
       .select(col("x.src").as("vec_a"), col("x.dst").as("vec_b"),
         col("x.cos_e6").as("cos_e6"))
       .orderBy("vec_a", "vec_b")
-      .persist()
-    out.count() // materialize so the top-k cache can be released
-    topk.unpersist()
-    out
   }
 
   val knnGraphSql: String =
@@ -1619,7 +1596,8 @@ object Similarity {
   def graphPagerank(spark: SparkSession, d: String,
       iters: Int = DefaultPagerankIters): DataFrame = {
     require(iters >= 1 && iters <= 8, s"iters must be in [1, 8], got $iters")
-    val mutual = knnGraph(spark, d)
+    // both edge directions read the graph
+    val mutual = knnGraph(spark, d).persist()
     val edges = mutual.select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .union(mutual.select(col("vec_b").as("src"), col("vec_a").as("dst")))
       .persist()
@@ -1633,15 +1611,9 @@ object Similarity {
         .groupBy("node")
         .agg(expr("150000L + (85 * sum(flow)) div 100").as("r_e6"))
     }
-    val out = ranks.join(deg.withColumnRenamed("src", "node"), Seq("node"))
+    ranks.join(deg.withColumnRenamed("src", "node"), Seq("node"))
       .select(col("node"), col("r_e6"), col("deg"))
       .orderBy("node")
-      .persist()
-    out.count() // materialize so the edge/degree/graph caches can be released
-    edges.unpersist()
-    deg.unpersist()
-    mutual.unpersist() // knnGraph's own result cache — this consumer owns it
-    out
   }
 
   /** Unrolled PageRank oracle over the same mutual-kNN edges. */
@@ -2073,15 +2045,11 @@ object Similarity {
       .where(col("cos_e6") >= minCosE6)
       .select("vec_id").distinct()
       .withColumn("dropped", lit(true))
-    val out = assigned.select(col("vec_id"), col("cent_id"), col("bucket"))
+    assigned.select(col("vec_id"), col("cent_id"), col("bucket"))
       .join(broadcast(drops), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cent_id"), col("bucket"),
         coalesce(!col("dropped"), lit(true)).as("keep"))
       .orderBy("vec_id")
-      .persist()
-    out.count() // materialize so the assignment cache can be released
-    assigned.unpersist()
-    out
   }
 
   val dedupSemanticSql: String =

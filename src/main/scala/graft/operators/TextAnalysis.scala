@@ -260,9 +260,6 @@ object TextAnalysis {
     * dynamic pattern. Scale: two corpus exchanges (the token count
     * feeding the rule, re-used for the apply) and a vocab-sized
     * re-segmentation — each further round costs only the vocab pass.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def bpeApply(spark: SparkSession, d: String,
       topK: Int = DefaultBpePairs): DataFrame = {
@@ -271,7 +268,7 @@ object TextAnalysis {
       .orderBy(col("pair_count").desc, col("pair")).limit(1)
       .collect()(0).getString(0)
     require(top1.matches("[a-z0-9]{2}"), s"merge rule must be alphanumeric: $top1")
-    val out = wf
+    wf
       .select(col("word"), col("cf"),
         expr(s"regexp_extract_all(word, '$top1|.', 0)").as("syms"))
       .where(size(col("syms")) >= 2)
@@ -284,10 +281,6 @@ object TextAnalysis {
         col("pair_count"), col("n_words"))
       .orderBy(col("pair_count").desc, col("pair"))
       .limit(topK)
-      .persist()
-    out.count() // materialize so the vocabulary cache can be released
-    wf.unpersist()
-    out
   }
 
   val bpeApplySql: String =
@@ -432,7 +425,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_words"),
         sum("n_chars").as("n_char_syms"),
         sum("n_bpe").as("n_bpe_tokens"))
-    val out = Tables.documents(spark, d).select(col("doc_id"))
+    Tables.documents(spark, d).select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_words"), lit(0L)).as("n_words"),
@@ -441,10 +434,6 @@ object TextAnalysis {
       .withColumn("compression_e4",
         expr("CASE WHEN n_bpe_tokens > 0 THEN n_char_syms * 10000L div n_bpe_tokens ELSE 0L END"))
       .orderBy("doc_id")
-      .persist()
-    out.count() // materialize so the vocabulary cache can be released
-    wf.unpersist()
-    out
   }
 
   /** The unrolled trainer-round CTE chain (wf, s0, then per-round
@@ -525,7 +514,7 @@ object TextAnalysis {
     val wordLens = seg.select(col("word"),
       length(col("word")).cast(LongType).as("n_chars"),
       (size(split(col("seg"), " ")) - 1).cast(LongType).as("n_bpe"))
-    val out = Tables.documents(spark, d)
+    Tables.documents(spark, d)
       .select(col("lang"), explode(expr(tokensSpark)).as("word"))
       .join(broadcast(wordLens), Seq("word"))
       .groupBy("lang")
@@ -537,10 +526,6 @@ object TextAnalysis {
       .withColumn("chars_per_token_e4",
         expr("n_chars * 10000L div n_bpe_tokens"))
       .orderBy("lang")
-      .persist()
-    out.count() // materialize so the vocabulary cache can be released
-    wf.unpersist()
-    out
   }
 
   val tokenFertilitySql: String = {
@@ -649,27 +634,14 @@ object TextAnalysis {
     * fingerprints (boilerplate) are the skew risk — AQE's skew-join
     * split covers the join, and production would also cap posting-list
     * length (drop fps occurring in > K docs, the classic stop-fp rule).
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def winnowPairs(spark: SparkSession, d: String,
-      minShared: Long = 3L): DataFrame = {
-    // the RETURNED frame must be the persisted lineage root (an orderBy
-    // wrapper over the funnel's cache would make unpersist() a no-op for
-    // callers — Dataset.unpersist only drops the dataset's own plan)
-    val funnel = winnowPairFunnel(spark, d, minShared)
-    val out = funnel.orderBy("doc_a", "doc_b").persist()
-    out.count() // materialize so the funnel cache can be released
-    funnel.unpersist()
-    out
-  }
+      minShared: Long = 3L): DataFrame =
+    winnowPairFunnel(spark, d, minShared).orderBy("doc_a", "doc_b")
 
   /** The shared candidate-pair funnel: (doc_a, doc_b, n_shared_fps)
     * pairs of EXACT-CANONICAL documents sharing >= minShared winnow
-    * fingerprints, MATERIALIZED (the returned frame is the persisted
-    * lineage root; the upstream caches are released before returning).
-    * Feeds both the pair report and the span merger.
+    * fingerprints. Feeds both the pair report and the span merger.
     *
     * Two round-8 degeneracy guards (the round-7 replica study's fix):
     * the fingerprint join runs over exact-duplicate group canonicals
@@ -693,11 +665,7 @@ object TextAnalysis {
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_fps"))
       .where(col("n_shared_fps") >= minShared)
-    val out = Dedup.capPairs(pairs, "n_shared_fps", maxPartners).persist()
-    out.count() // materialize so the upstream caches can be released
-    fps.unpersist()
-    collapsed.unpersist()
-    out
+    Dedup.capPairs(pairs, "n_shared_fps", maxPartners)
   }
 
   /** Span-merge knobs shared by the Scala defaults and the SQL oracle.
@@ -739,15 +707,13 @@ object TextAnalysis {
     * hashes, so results stay bit-identical; the minSpanTokens filter
     * (>= 4 consecutive matches) makes a fabricated SPAN astronomically
     * unlikely.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def spanDedup(spark: SparkSession, d: String,
       minShared: Long = DefaultMinSharedFps,
       minSpanTokens: Long = DefaultMinSpanTokens): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cand = winnowPairFunnel(spark, d, minShared)
+    // three reads below: both candidate-doc branches and the match join
+    val cand = winnowPairFunnel(spark, d, minShared).persist()
     val pairs = cand.select("doc_a", "doc_b")
     val candDocs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id")))
@@ -768,7 +734,7 @@ object TextAnalysis {
       .select(col("doc_a"), col("doc_b"),
         col("pa.pos").as("pos_a"), col("pb.pos").as("pos_b"))
     val diagW = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    val out = matches
+    matches
       .withColumn("diag", col("pos_a") - col("pos_b"))
       // island break = this match does not extend the previous one;
       // running sum of breaks numbers the maximal runs
@@ -783,11 +749,6 @@ object TextAnalysis {
       .where(col("span_tokens") >= minSpanTokens)
       .select("doc_a", "doc_b", "start_a", "start_b", "span_tokens")
       .orderBy("doc_a", "doc_b", "start_a", "start_b")
-      .persist()
-    out.count() // materialize so the pair/positional caches can be released
-    cand.unpersist()
-    pos.unpersist()
-    out
   }
 
   /** SPAN COVERAGE — the removal decision the span detector feeds: per
@@ -806,15 +767,13 @@ object TextAnalysis {
     * tiny vs the corpus; the sweep windows partition per doc. The
     * corpus-side token counts are one map-side kernel pass, and the
     * final join keys on doc_id once.
-    * Returned frame is its own persisted lineage root — the CALLER
-    * owns the release (`unpersist()` when done; the verify/bench
-    * harnesses clearCache between queries).
     */
   def spanCoverage(spark: SparkSession, d: String,
       minShared: Long = DefaultMinSharedFps,
       minSpanTokens: Long = DefaultMinSpanTokens): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spans = spanDedup(spark, d, minShared, minSpanTokens)
+    // both interval sides read the spans
+    val spans = spanDedup(spark, d, minShared, minSpanTokens).persist()
     val iv = spans.select(col("doc_a").as("doc_id"),
         col("start_a").as("s"), (col("start_a") + col("span_tokens")).as("e"))
       .unionByName(spans.select(col("doc_b").as("doc_id"),
@@ -840,7 +799,7 @@ object TextAnalysis {
     // second corpus pass and a corpus-sized equi-join for a column the
     // window pass could carry.
     val winByCh = org.apache.spark.sql.expressions.Window.partitionBy("ch")
-    val out = Tables.documents(spark, d)
+    Tables.documents(spark, d)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.text_stats(col("text"), Nil)
           .getItem(0).as("n_tokens"),
@@ -853,10 +812,6 @@ object TextAnalysis {
         expr("CASE WHEN n_tokens > 0 THEN coalesce(covered_tokens, 0L) * 10000L div n_tokens ELSE 0L END")
           .as("coverage_e4"))
       .orderBy("doc_id")
-      .persist()
-    out.count() // materialize so the upstream caches can be released
-    spans.unpersist()
-    out
   }
 
   /** DuckDB twin of [[spanDedup]]: same funnel (winnow pairs), same
@@ -1287,17 +1242,13 @@ object TextAnalysis {
       .select(col("doc_id"), explode(col("sset")).as("shingle"))
       .persist()
     val df = sets.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val out = sets.join(df, Seq("shingle"))
+    sets.join(df, Seq("shingle"))
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_shingles"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_unique"))
       .withColumn("novelty_e4", expr("n_unique * 10000L div n_shingles"))
       .orderBy("doc_id")
-      .persist()
-    out.count() // materialize so the exploded-shingle cache can be released
-    sets.unpersist()
-    out
   }
 
   val textNoveltySql: String =
@@ -1431,9 +1382,7 @@ object TextAnalysis {
     * Scale shape: one explode into (doc, pos, gram) rows — persisted
     * because it feeds both the df aggregation and the cover join, and
     * exchange reuse does not reliably dedupe identical shuffle subtrees.
-    * The RETURNED frame is the persisted lineage root (materialized, the
-    * gram cache released before returning — caller owns the final
-    * unpersist, same contract as [[winnowPairs]]). The df pass is one
+    * The df pass is one
     * gram-keyed aggregation of map-side partials; flagged grams are by
     * construction a small fraction of the vocabulary, and the cover
     * pass re-joins the SAME gram-keyed frame against them (an equi-join
@@ -1482,9 +1431,7 @@ object TextAnalysis {
       val contents = rep.groupBy("ch")
         .agg(min(col("doc_id")).as("cid"), count(lit(1)).as("w"))
         .localCheckpoint(true)
-      val out = boilerplateScrubCollapsed(rep, contents, docsT, n, minDf)
-      rep.unpersist()
-      out
+      boilerplateScrubCollapsed(rep, contents, docsT, n, minDf)
     } else boilerplateScrubDirect(spark, d, n, minDf)
   }
 
@@ -1533,7 +1480,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(col("ps")).as("pos"))
       .groupBy("doc_id")
       .agg(collect_list("pos").as("starts"))
-    val out = t.join(cov, Seq("doc_id"), "left")
+    t.join(cov, Seq("doc_id"), "left")
       .withColumn("__sc", graft.functions.GraftFunctions.scrub_cover(
         col("toks"), col("starts"), n))
       .select(col("doc_id"),
@@ -1542,10 +1489,7 @@ object TextAnalysis {
         expr("coalesce(__sc.n_cov, 0L) * 10000L div size(toks)").as("cov_e4"),
         substring(sha2(col("__sc.scrub"), 256), 1, 16)
           .as("scrub_h16"))
-      .orderBy("doc_id").persist()
-    out.count() // materialize so the gram cache can be released
-    gd.unpersist()
-    out
+      .orderBy("doc_id")
   }
 
   /** The collapsed branch of [[boilerplateScrub]]: the direct
@@ -1596,15 +1540,11 @@ object TextAnalysis {
         expr("coalesce(__sc.n_cov, 0L) * 10000L div size(toks)").as("cov_e4"),
         substring(sha2(col("__sc.scrub"), 256), 1, 16)
           .as("scrub_h16"))
-    val out = rep
+    rep
       .join(contents.select(col("ch"), col("cid")), Seq("ch"))
       .join(perContent, Seq("cid"))
       .select("doc_id", "n_toks", "n_covered", "cov_e4", "scrub_h16")
-      .orderBy("doc_id").persist()
-    out.count() // materialize so the upstream caches can be released
-    gd.unpersist()
-    canon.unpersist()
-    out
+      .orderBy("doc_id")
   }
 
   val boilerplateScrubSql: String = {
@@ -1802,16 +1742,12 @@ object TextAnalysis {
         .select(lit(k.toLong).as("vocab_k"), col("n_in"),
           col("covered_tokens"), col("min_count_in"))
     }.reduce(_ union _)
-    val out = cuts.join(broadcast(totals))
+    cuts.join(broadcast(totals))
       .select(col("vocab_k"), col("n_in"), col("covered_tokens"),
         col("min_count_in"),
         expr("covered_tokens * 1000000L div n_tokens_total").as("coverage_ppm"),
         col("n_vocab_total"), col("n_tokens_total"))
       .orderBy("vocab_k")
-      .persist()
-    out.count() // materialize so the vocab cache can be released
-    tc.unpersist()
-    out
   }
 
   val vocabCoverageSql: String = {
@@ -1877,7 +1813,7 @@ object TextAnalysis {
       .withColumnRenamed("first_slice", "slice")
     val w = Window.orderBy("slice")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = spark.range(SaturationSlices).select(col("id").as("slice"))
+    spark.range(SaturationSlices).select(col("id").as("slice"))
       .join(perSliceDocs, Seq("slice"), "left")
       .join(perSliceOcc, Seq("slice"), "left")
       .join(newGrams, Seq("slice"), "left")
@@ -1894,10 +1830,6 @@ object TextAnalysis {
         expr("CASE WHEN occ > 0 THEN new_grams * 1000000L div occ ELSE 0L END")
           .as("discovery_ppm"))
       .orderBy("slice")
-      .persist()
-    out.count()
-    gs.unpersist()
-    out
   }
 
   val ngramSaturationSql: String =

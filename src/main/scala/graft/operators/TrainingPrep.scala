@@ -612,16 +612,12 @@ object TrainingPrep {
       val lm = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
         .join(bi.groupBy("w1").agg(count(lit(1)).as("h")), Seq("w1"))
         .select(col("w1"), col("w2"), expr("c * 1000000L div h").as("p_e6"))
-      val out = bi
+      bi
         .join(lm, Seq("w1", "w2"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
           expr("sum(p_e6) div count(1)").as("score_e6"))
         .orderBy("doc_id")
-        .persist()
-      out.count() // materialize so the bigram cache can be released
-      bi.unpersist()
-      out
     } else {
       val rep = docsT.select(col("doc_id"),
           graft.functions.GraftFunctions.content_hash(col("text")).as("ch"))
@@ -648,14 +644,9 @@ object TrainingPrep {
         .groupBy("ch")
         .agg(count(lit(1)).as("n_bigrams"),
           expr("sum(p_e6) div count(1)").as("score_e6"))
-      val out = rep.join(perContent, Seq("ch"))
+      rep.join(perContent, Seq("ch"))
         .select(col("doc_id"), col("n_bigrams"), col("score_e6"))
         .orderBy("doc_id")
-        .persist()
-      out.count()
-      bi.unpersist()
-      rep.unpersist()
-      out
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,10 +33,21 @@ object Tables {
     * serialized or scoped per thread.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val p = s"${sfDir.stripSuffix("/")}/$name.parquet"
-    widthRatchet(spark, p)
-    spark.read.parquet(p)
+    val p = tablePath(sfDir, name)
+    read(spark, p, listing(spark, p))
   }
+
+  private def tablePath(sfDir: String, name: String): String =
+    s"${sfDir.stripSuffix("/")}/$name.parquet"
+
+  /** Read `path` given its one listing, which sizes the width ratchet. */
+  private def read(spark: SparkSession, path: String, files: Seq[FileStatus]): DataFrame = {
+    widthRatchetTo(spark, volumeWidth(files, DefaultBytesPerPartition))
+    spark.read.parquet(path)
+  }
+
+  private def listing(spark: SparkSession, path: String): Seq[FileStatus] =
+    dataFiles(spark.sparkContext.hadoopConfiguration, path)
 
   /** Data files under `path` (a file or a directory), with any file
     * under a HIDDEN path component skipped — a crashed write's
@@ -45,11 +57,11 @@ object Tables {
     * ignores whole `_`/`.` components) never sees.
     */
   private[graft] def dataFiles(conf: org.apache.hadoop.conf.Configuration,
-      path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+      path: String): Seq[FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     val rootStr = fs.makeQualified(root).toString
-    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    val out = Seq.newBuilder[FileStatus]
     val it = fs.listFiles(root, true)
     while (it.hasNext) {
       val st = it.next()
@@ -67,19 +79,20 @@ object Tables {
     * plan-shape decision that must not flap between queries of one
     * session, but a table REWRITTEN in-process (a regenerated /tmp
     * replica, a test overwrite) must re-decide instead of reusing a
-    * stale count (the r14 staleness hole). The listing runs every call
-    * (one fs metadata pass); the footer reads — the expensive part —
-    * run only when the signature changes. An unreadable footer counts
-    * as 0 row groups instead of failing reader construction: a file
-    * deleted or truncated between the listing and the read is a race
-    * to survive, not a reason the whole scan cannot plan.
+    * stale count (the r14 staleness hole). The caller passes the
+    * listing (one fs metadata pass per read); the footer reads — the
+    * expensive part — run only when its signature changes. An
+    * unreadable footer counts as 0 row groups instead of failing reader
+    * construction: a file deleted or truncated between the listing and
+    * the read is a race to survive, not a reason the whole scan cannot
+    * plan.
     */
   private val rowGroupsMemo = new java.util.concurrent.ConcurrentHashMap[
     String, ((Int, Long, Long), (Int, Long))]()
 
-  private def footerStats(spark: SparkSession, path: String): (Int, Long) = {
+  private def footerStats(spark: SparkSession, path: String,
+      files: Seq[FileStatus]): (Int, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = dataFiles(conf, path)
     val sig = (files.size, files.iterator.map(_.getLen).sum,
       if (files.isEmpty) 0L
       else files.iterator.map(_.getModificationTime).max)
@@ -101,12 +114,9 @@ object Tables {
     (groups, rows)
   }
 
-  private def rowGroups(spark: SparkSession, path: String): Int =
-    footerStats(spark, path)._1
-
   /** Table row count from the parquet footers alone — no Spark job, one
-    * driver-side metadata pass, memoized by the same listing signature
-    * as [[rowGroups]]. This is the corpus-size signal the
+    * driver-side metadata pass, memoized by the listing signature
+    * ([[footerStats]]). This is the corpus-size signal the
     * scale-adaptive knobs condition on (the sign-LSH plane count in
     * [[graft.operators.Similarity.numPlanesFor]], mirroring
     * `Dedup.simhash64BandModeFor`): a plan-shape decision may not cost
@@ -114,8 +124,10 @@ object Tables {
     * parquet table.
     */
   private[graft] def tableRows(spark: SparkSession, sfDir: String,
-      name: String): Long =
-    footerStats(spark, s"${sfDir.stripSuffix("/")}/$name.parquet")._2
+      name: String): Long = {
+    val p = tablePath(sfDir, name)
+    footerStats(spark, p, listing(spark, p))._2
+  }
 
   /** Volume-sized width for a WIDE exchange over a full-table frame —
     * a global range sort, a wide unclustered shuffle. A fixed
@@ -137,19 +149,21 @@ object Tables {
     * launch thousands of times over.
     */
   private[graft] def volumeSizedShufflePartitions(spark: SparkSession,
-      sfDir: String, name: String, bytesPerPartition: Long = 32L << 20): Int = {
-    val p = s"${sfDir.stripSuffix("/")}/$name.parquet"
+      sfDir: String, name: String,
+      bytesPerPartition: Long = DefaultBytesPerPartition): Int = {
     val floor = spark.sessionState.conf.numShufflePartitions
-    math.max(floor, volumeWidth(spark, p, bytesPerPartition))
+    math.max(floor,
+      volumeWidth(listing(spark, tablePath(sfDir, name)), bytesPerPartition))
   }
 
-  /** Partitions implied by a path's parquet bytes alone (no session
+  private val DefaultBytesPerPartition = 32L << 20
+
+  /** Partitions implied by a listing's parquet bytes alone (no session
     * floor): one per `bytesPerPartition`, capped at 4096.
     */
-  private def volumeWidth(spark: SparkSession, path: String,
+  private def volumeWidth(files: Seq[FileStatus],
       bytesPerPartition: Long): Int = {
-    val bytes = dataFiles(spark.sparkContext.hadoopConfiguration, path)
-      .iterator.map(_.getLen).sum
+    val bytes = files.iterator.map(_.getLen).sum
     math.min(math.ceil(bytes.toDouble / bytesPerPartition.toDouble).toLong,
       4096L).toInt
   }
@@ -228,8 +242,10 @@ object Tables {
     * the way [[volumeSizedShufflePartitions]] takes its own.
     */
   private[graft] def widthRatchet(spark: SparkSession, path: String,
-      bytesPerPartition: Long = 32L << 20): Unit = {
-    val want = volumeWidth(spark, path, bytesPerPartition)
+      bytesPerPartition: Long = DefaultBytesPerPartition): Unit =
+    widthRatchetTo(spark, volumeWidth(listing(spark, path), bytesPerPartition))
+
+  private def widthRatchetTo(spark: SparkSession, want: Int): Unit = {
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val cur = spark.conf.getOption(key).map(_.toInt)
       .getOrElse(spark.sessionState.conf.numShufflePartitions)
@@ -297,10 +313,12 @@ object Tables {
     * row groups).
     */
   def documentsFloored(spark: SparkSession, d: String): DataFrame = {
-    val df = table(spark, d, "documents")
+    // one listing serves both the width ratchet and the row-group census
+    val p = tablePath(d, "documents")
+    val files = listing(spark, p)
+    val df = read(spark, p, files)
     val cores = spark.sparkContext.defaultParallelism
-    val path = s"${d.stripSuffix("/")}/documents.parquet"
-    if (rowGroups(spark, path) < cores) df.repartition(cores, col("doc_id"))
+    if (footerStats(spark, p, files)._1 < cores) df.repartition(cores, col("doc_id"))
     else df
   }
 

@@ -33,7 +33,7 @@ object PlanDump {
         fn(spark, sfDir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)
       }
-      spark.catalog.clearCache()
+      Sessions.releaseCaches(spark)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"), plan)
       println(s"[plandump] wrote $outDir/${n}_$suffix.txt")

@@ -91,7 +91,7 @@ object PlanStats {
             f"sread=${sr / 1000000}%6dMB swrite=${sw / 1000000}%6dMB " +
             f"spill=${sp / 1000000}%6dMB  $name")
       }
-      spark.catalog.clearCache()
+      Sessions.releaseCaches(spark)
     }
     spark.stop()
   }

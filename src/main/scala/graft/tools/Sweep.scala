@@ -210,7 +210,7 @@ object Sweep {
       // ever unwinds, restores values equal to this baseline)
       if (status == "timeout")
         graft.sources.Tables.widthRestore(spark, widthBaseline)
-      spark.catalog.clearCache()
+      Sessions.releaseCaches(spark)
       val canary = canaryRatio()
       val line = String.format(java.util.Locale.ROOT,
         """{"q":"%s","sec":%.3f,"status":"%s","canary":%.2f,"sf":"%s"}""",
@@ -258,7 +258,7 @@ object Sweep {
           }
         val dt = (System.nanoTime() - t0) / 1e9
         pool.shutdownNow()
-        spark.catalog.clearCache()
+        Sessions.releaseCaches(spark)
         val line = String.format(java.util.Locale.ROOT,
           """{"q":"%s","sec":%.3f,"status":"%s","twin":"%s",""" +
             """"expected_output_rows":%d,"canary":%.2f,"sf":"%s"}""",

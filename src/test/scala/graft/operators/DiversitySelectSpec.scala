@@ -58,7 +58,7 @@ class DiversitySelectSpec extends AnyFunSuite with SparkTestBase {
     val got = res.collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    res.unpersist(blocking = true)
+    graft.Sessions.releaseCaches(spark)
     assert(spark.sharedState.cacheManager.isEmpty,
       "boilerplateScrub leaked a cache")
     assert(got === expected)

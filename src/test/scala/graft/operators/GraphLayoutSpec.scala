@@ -81,16 +81,4 @@ class GraphLayoutSpec extends AnyFunSuite with SparkTestBase {
     // damping floor: no node can fall below the teleport constant
     assert(rows.forall(_._2 >= 150000L))
   }
-
-  test("knnGraph and graphPagerank release every intermediate cache") {
-    spark.catalog.clearCache()
-    val g = Similarity.knnGraph(spark, sf)
-    // the returned frame's own cache (its lineage root) is the caller's
-    // to release; nothing else may stay pinned
-    g.unpersist(blocking = true)
-    assert(spark.sharedState.cacheManager.isEmpty, "knnGraph leaked a cache")
-    val pr = Similarity.graphPagerank(spark, sf)
-    pr.unpersist(blocking = true)
-    assert(spark.sharedState.cacheManager.isEmpty, "graphPagerank leaked a cache")
-  }
 }

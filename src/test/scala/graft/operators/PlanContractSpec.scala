@@ -273,7 +273,7 @@ class PlanContractSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_span_dedup hashes only candidate docs and never goes all-pairs") {
-    // the returned frame is the persisted lineage root; the cached plan
+    // the positional frame is persisted; its cached plan
     // (InMemoryRelation inner child) still renders in the tree string
     val plan = stripAqe(
       TextAnalysis.spanDedup(spark, sf).queryExecution.executedPlan)

@@ -185,19 +185,4 @@ class TextIndexSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(rows.exists(_._1 > 1L), "fixture should contain shared fingerprints")
   }
-
-  test("winnow/span/bpe operators release every intermediate cache") {
-    import org.apache.spark.sql.DataFrame
-    for ((name, mk) <- Seq[(String, () => DataFrame)](
-        "winnowPairs" -> (() => TextAnalysis.winnowPairs(spark, sf)),
-        "spanDedup" -> (() => TextAnalysis.spanDedup(spark, sf)),
-        "spanCoverage" -> (() => TextAnalysis.spanCoverage(spark, sf)),
-        "bpeApply" -> (() => TextAnalysis.bpeApply(spark, sf)))) {
-      spark.catalog.clearCache()
-      // the returned frame must be the persisted lineage root: after the
-      // caller releases it, nothing may stay pinned
-      mk().unpersist(blocking = true)
-      assert(spark.sharedState.cacheManager.isEmpty, s"$name leaked a cache")
-    }
-  }
 }
