@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -97,10 +98,14 @@ object Bench {
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     val failures = scala.collection.mutable.LinkedHashSet[String]()
+    // per query, the generated classes its last timed pass compiled
+    val compiles = scala.collection.mutable.Map[String, Long]()
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // a failed run yields None: its (tiny) fast-fail duration must never
     // enter the median or the total — a broken query would otherwise make
     // the bench look FASTER
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      val c0 = compiled()
       val t0 = System.nanoTime()
       val ok =
         // noop DSv2 sink: materializes EVERY output column and keeps the
@@ -116,6 +121,7 @@ object Bench {
             false
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      compiles(name) = compiled() - c0
       Sessions.releaseCaches(spark)
       if (ok) Some(dt) else None
     }
@@ -154,9 +160,12 @@ object Bench {
     // push many spreads past 1.5. The run is FLAGGED (not failed: the
     // numbers are still the best available) when the median spread exceeds
     // 1.3 or externally-visible load preexists the run. Pass 1 is excluded
-    // from the spread (when ≥3 passes ran): it carries per-query codegen
-    // compilation, which legitimately makes pass 1 slower than the warm
-    // passes and would flag every quiet run.
+    // from the spread (when ≥3 passes ran): it compiles each query's
+    // generated classes, which legitimately makes it slower than the warm
+    // passes and would flag every quiet run. Pass 1 alone compiles only
+    // while the suite's classes fit Spark's codegen cache
+    // (Sessions.CodegenCacheEntries); past it every pass recompiles what
+    // was evicted, and the `compiles` map shows it as nonzero counts.
     val warmPasses = if (reps >= 3) passes.drop(1) else passes
     val spreads = names.flatMap { case (name, _) =>
       val times = warmPasses.flatMap(_(name))
@@ -198,8 +207,11 @@ object Bench {
       .mkString("{", ",", "}")
     val planJson = planning.map { case (k, v) => s"\"" + k + "\":" + s3(v) }
       .mkString("{", ",", "}")
+    val compileJson = names.map { case (k, _) => s"\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
     val planGuard = s""""planning":$planJson,""" +
-      s""""planning_total":${s3(planning.map(_._2).sum)},"""
+      s""""planning_total":${s3(planning.map(_._2).sum)},""" +
+      s""""compiles":$compileJson,"""
     val guard = planGuard +
       s""""loadavg_start":${arr(loadStart)},"loadavg_end":${arr(loadEnd)},""" +
       s""""spread_median":${s3(medianSpread)},"spread_p90":${s3(p90Spread)},""" +

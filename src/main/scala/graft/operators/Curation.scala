@@ -1487,7 +1487,8 @@ object Curation {
     * k-means/BPE collect discipline: model-sized scalars only).
     */
   /** The centered integer feature frame shared by [[lrTrain]] and
-    * [[lrScore]]: (doc_id, y, x0..x4), persisted and forced.
+    * [[lrScore]]: (doc_id, y, x0..x4), persisted; the first round's
+    * collect fills it.
     */
   private def lrFeatures(spark: SparkSession, d: String): (DataFrame, Long) = {
     import graft.functions.GraftFunctions
@@ -1529,8 +1530,6 @@ object Curation {
       col("doc_id") +: col("y") +: lit(10000L).as("x0") +:
         (1 to 4).map(j => (col(s"r$j") - lit(means(j - 1))).as(s"x$j")): _*)
       .persist()
-    feats.count()
-    rawFeats.unpersist()
     (feats, n)
   }
 

@@ -91,10 +91,12 @@ object Dedup {
     signaturesOver(Tables.documents(spark, d), numHashes)
 
   private[graft] def signaturesOver(docs: DataFrame, numHashes: Int = DefaultNumHashes): DataFrame =
-    docs
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.minhash_sig(col("text"), numHashes).as("sig"))
-      .where(col("sig").isNotNull)
+    minhashSigs(docs, numHashes).where(col("sig").isNotNull)
+
+  /** (doc_id, sig) of every doc, sig null where a doc has no shingles. */
+  private def minhashSigs(docs: DataFrame, numHashes: Int): DataFrame =
+    docs.select(col("doc_id"),
+      graft.functions.GraftFunctions.minhash_sig(col("text"), numHashes).as("sig"))
 
   private def signaturesDuckCte(numHashes: Int = DefaultNumHashes,
       src: String = "documents"): String =
@@ -252,7 +254,8 @@ object Dedup {
     val mh = leg("minhash_lsh", bands(signatures(spark, d)),
       Seq("band_id", "band_val"), DefaultNumBands)
     val canonBands = simhash64Bands(
-      simhash64Sigs(canonicalReps(exactCollapse(spark, d))), "narrow")
+      simhash64Sigs(canonicalReps(exactCollapse(spark, d)))
+        .where(col("sbands").isNotNull), "narrow")
     val sh = leg("simhash64_narrow", canonBands, Seq("band_id", "band_val"), 4)
     val (bucketExpr, _) = Similarity.bucketExprFor(spark, d)
     val emb = leg("embedding_lsh",
@@ -405,11 +408,15 @@ object Dedup {
     * back to members with [[expandMemberPairs]] or count member pairs
     * algebraically with [[pairCountsByKey]]. Each face passes only what
     * differs:
-    *  - `signatures`: the reps' signature frames, each (doc_id, …) with
-    *    signature-less reps dropped. A canonical is ELIGIBLE (its group
-    *    yields identical-content intra pairs) iff it is in every frame.
+    *  - `signatures`: the reps' signature projections, each
+    *    (doc_id, sig) with a null sig for a signature-less rep. The
+    *    funnel persists each and drops the null rows above the cache,
+    *    so every kernel runs once per rep. A canonical is ELIGIBLE (its
+    *    group yields identical-content intra pairs) iff it has every
+    *    signature.
     *  - `band`: the first frame → candidate pairs (doc_a < doc_b).
-    *  - `score`: (candidates, frames) → (ga, gb, <metric cols>).
+    *  - `score`: (candidates, frames) → (ga, gb, <metric cols>), with
+    *    the frames already null-free.
     *
     * Materialize before consume: the signature frames and the scored
     * frame are persisted, and ONE [[fillCaches]] job fills them — and,
@@ -431,9 +438,12 @@ object Dedup {
       signatures: DataFrame => Seq[DataFrame],
       band: DataFrame => DataFrame)(
       score: (DataFrame, Seq[DataFrame]) => DataFrame): Funnel = {
-    val frames = signatures(canonicalReps(membership)).map(_.persist())
+    val cached = signatures(canonicalReps(membership)).map(_.persist())
+    // drop signature-less reps ABOVE the persist: a null filter under it
+    // is pushed below the projection and runs the kernel twice per row
+    val frames = cached.map(f => f.where(col(f.columns(1)).isNotNull))
     val gd = score(band(frames.head), frames).persist()
-    fillCaches(frames :+ gd: _*)
+    fillCaches(cached :+ gd: _*)
     val elig = frames.map(_.select(col("doc_id").as("gid")))
       .reduce(_.join(_, Seq("gid"), "left_semi"))
     (membership, elig, gd)
@@ -444,17 +454,18 @@ object Dedup {
     membership.where(col("doc_id") === col("gid"))
       .select(col("doc_id"), col("text"))
 
-  /** (doc_id, sset) distinct-shingle sets of docs that have shingles. */
+  /** (doc_id, sset) distinct-shingle sets, sset null where a doc has
+    * no shingles.
+    */
   private def shingleSets(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
-      .where(col("sset").isNotNull)
+      graft.functions.GraftFunctions.shingle_set(col("text")).as("sset"))
 
   /** The MinHash family's signature frames — (signatures, shingle
     * sets) — banded by [[candidatePairs]] on the signatures.
     */
   private def minhashFrames(numHashes: Int)(reps: DataFrame): Seq[DataFrame] =
-    Seq(signaturesOver(reps, numHashes), shingleSets(reps))
+    Seq(minhashSigs(reps, numHashes), shingleSets(reps))
 
   /** Attach `frame`'s column `c` to both endpoints of a (doc_a, doc_b)
     * pair frame as `<as>_a` / `<as>_b` — the id-keyed lookup joins every
@@ -1024,13 +1035,12 @@ object Dedup {
   private val duckShr: (String, Int) => String =
     (e, n) => s"($e >> $n)"
 
-  /** (doc_id, sbands) 64-bit fingerprints, as 4×16-bit band values, of
-    * docs that have tokens.
+  /** (doc_id, sbands) 64-bit fingerprints, as 4×16-bit band values,
+    * sbands null where a doc has no tokens.
     */
   private def simhash64Sigs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        graft.functions.GraftFunctions.simhash64_bands(col("text")).as("sbands"))
-      .where(col("sbands").isNotNull)
+      graft.functions.GraftFunctions.simhash64_bands(col("text")).as("sbands"))
 
   /** (doc_id, band_id, band_val) rows of a fingerprint frame under a
     * banding mode — the S-curve knob production turns as the corpus
@@ -1792,7 +1802,7 @@ object Dedup {
       .withColumn("gid", min("doc_id").over(Window.partitionBy("rh")))
       .select("doc_id", "gid", "text")
       .persist()
-    funnel(membership, reps => Seq(signaturesOver(reps, numHashes)),
+    funnel(membership, reps => Seq(minhashSigs(reps, numHashes)),
         candidatePairs(_, numHashes, numBands)) { (cand, _) =>
       val pfx = canonicalReps(membership)
         .select(col("doc_id"), substring(col("text"), 1, maxChars).as("pfx"))

@@ -1731,7 +1731,10 @@ object TextAnalysis {
       .select(explode(expr(tokensSpark)).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .persist()
-    tc.count() // one count pass; every cut below reuses the cache
+    // Not only a fill: the cuts are planned over a filled cache. Planned
+    // over an unfilled one, the action ran 10 jobs instead of 2 at sf0.1
+    // (11 in all, not 6), so this count stays.
+    tc.count()
     val totals = tc.agg(
       sum("c").as("n_tokens_total"), count(lit(1)).as("n_vocab_total"))
     val cuts = VocabCoverageCuts.map { k =>
