@@ -2,10 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression,
+  ExpressionInfo, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.execution.{ColumnarRule, ColumnarToRowExec,
+  FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType}
 
 import graft.functions.{GraftFunctions, Uint256Encode, Uint256RoundTrip, Uint256ToDecimal}
 
@@ -13,17 +19,24 @@ import graft.functions.{GraftFunctions, Uint256Encode, Uint256RoundTrip, Uint256
   *
   * {{{ --conf spark.sql.extensions=graft.GraftExtensions }}}
   *
-  * registers the engine's SQL functions and its optimizer rule, so a
-  * plain `spark-sql` user gets `uint256_encode(...)`, `minhash_sig(...)`
-  * etc. plus the algebraic simplifications below with no code changes.
-  * The function list is [[graft.functions.GraftFunctions.sqlBuilders]] —
-  * the same builders `registerAll` installs, so the extension and the
-  * library session expose an identical SQL surface.
+  * registers the engine's SQL functions, its two optimizer rules and
+  * its one physical rule, so a plain `spark-sql` user gets
+  * `uint256_encode(...)`, `minhash_sig(...)` etc. plus the rewrites
+  * below with no code changes. The function list is
+  * [[graft.functions.GraftFunctions.sqlBuilders]] — the same builders
+  * `registerAll` installs, so the extension and the library session
+  * expose an identical SQL surface. The optimizer rules are
+  * [[Uint256Simplification]] and [[DotKernelCompile]]; the physical
+  * rule, [[ScanBoundReferences]], runs after the columnar transitions
+  * of every plan and every AQE stage.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => Uint256Simplification)
     ext.injectOptimizerRule(_ => DotKernelCompile)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def postColumnarTransitions: Rule[SparkPlan] = ScanBoundReferences
+    })
     GraftFunctions.sqlBuilders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
@@ -122,4 +135,59 @@ object DotKernelCompile extends Rule[LogicalPlan] {
         graft.functions.DotLongExact(l, r,
           failOnOverflow = m.evalMode == EvalMode.ANSI)
     }
+}
+
+/** Scan bounds out of the generated code: in a `FilterExec` directly
+  * over a file scan (with or without the `ColumnarToRowExec` between
+  * them), every non-null int or bigint literal operand of a comparison
+  * becomes a [[ReferenceLiteral]]. Whole-stage codegen inlines a literal
+  * into the class source, so the same filter with other bounds would be
+  * a new class, compiled afresh on every head tick's `scanRange`. With
+  * the values read from the class's `references` array, the source is
+  * the same for any bounds and the codegen cache serves it.
+  *
+  * Only the filter changes. The scan's pushed filters were translated
+  * from the logical plan before this rule runs, so they keep their
+  * literals and row-group pruning is as before.
+  */
+object ScanBoundReferences extends Rule[SparkPlan] {
+
+  private def overFileScan(child: SparkPlan): Boolean = child match {
+    case _: FileSourceScanExec                    => true
+    case ColumnarToRowExec(_: FileSourceScanExec) => true
+    case _                                        => false
+  }
+
+  private def referenced(e: Expression): Expression = e match {
+    case Literal(v, t @ (IntegerType | LongType)) if v != null => ReferenceLiteral(v, t)
+    case other                                              => other
+  }
+
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f @ FilterExec(cond, child) if overFileScan(child) =>
+      f.copy(condition = cond.transform {
+        case c: BinaryComparison => c.withNewChildren(c.children.map(referenced))
+      })
+  }
+}
+
+/** A non-null int or bigint constant that generated code reads from the
+  * class's `references` array instead of inlining, so classes that
+  * differ only in the constant share one source (see
+  * [[ScanBoundReferences]]). It evaluates and prints as the literal; it
+  * is not foldable, so nothing folds it back into one.
+  */
+case class ReferenceLiteral(value: Any, dataType: DataType) extends LeafExpression {
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = Literal(value, dataType).toString
+  override def sql: String = Literal(value, dataType).sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("literal", value, CodeGenerator.boxedType(dataType))
+    val javaType = CodeGenerator.javaType(dataType)
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+      value = JavaCode.expression(s"$ref.${javaType}Value()", dataType))
+  }
 }

@@ -17,7 +17,8 @@ import graft.sinks.Metrics
   *
   * Two shapes write that layout, and both stay because each wins on one
   * side of the work-list size ([[ExtractPipeline.DefaultBulkThreshold]]):
-  *  - [[writeEachTile]] runs one job per tile over that tile's own frame;
+  *  - [[writeEachTile]] runs one job per tile over that tile's own frame:
+  *    one stage, no shuffle, the tile's scan in a single task;
   *  - [[writeTiles]] writes the whole work list in ONE job over one frame.
   *    A hash repartition on the tile key puts each tile's rows in exactly
   *    one task. Dynamic partition overwrite replaces only the touched
@@ -37,12 +38,21 @@ object BulkWriter {
     * only fragment (an empty frame still writes one schema-carrying
     * fragment). Overwrite mode replaces whatever the directory held.
     * Returns the rows written.
+    *
+    * Each tile is ONE Spark job: `coalesce(1)` folds the frame's
+    * partitions into one task, so scan, sort and write run as a single
+    * stage with no shuffle; a one-partition shuffle would make it two
+    * AQE jobs (the map stage, then the sort and write). The trade-off: the
+    * tile's scan runs in one task, not one per input split. Work lists
+    * that take this shape are short (under
+    * [[ExtractPipeline.DefaultBulkThreshold]]) and their tiles are the
+    * plan's head, so the single task reads little.
     */
   def writeEachTile(keyCol: String, work: Seq[Partition], tDir: String)(
       frame: Partition => DataFrame): Long =
     work.map { p =>
       val dir = Partitioner.partitionDir(tDir, p)
-      counted(frame(p), dir)(_.repartition(1).sortWithinPartitions(keyCol)
+      counted(frame(p), dir)(_.coalesce(1).sortWithinPartitions(keyCol)
         .write.mode("overwrite").parquet(dir))
     }.sum
 

@@ -43,10 +43,11 @@ object ExtractPipeline {
     * one job per partition). Each shape wins on its own side, measured
     * with the `etlbench` workloads on a 4-core box, each forced shape
     * interleaved with this pick: with every write in one job (threshold
-    * 1), the one-partition `head_follow` tick got 23% slower (median
-    * 0.80 → 0.99 s, slower in all 13 pairs); with every write per
-    * partition (threshold ∞), a `backfill` op (16 partitions per table)
-    * took 7.0-8.8 s instead of 2.0-2.1 s.
+    * 1), the one-partition `head_follow` tick got 59% slower (median
+    * 0.41 → 0.65 s, slower in all 8 pairs; the one-job shape still
+    * compiles its tile tag, the per-tile shape compiles nothing); with
+    * every write per partition (threshold ∞), a `backfill` op (16
+    * partitions per table) took 7.0-8.8 s instead of 2.0-2.1 s.
     */
   val DefaultBulkThreshold = 16
 

@@ -52,29 +52,25 @@ object MetadataSink {
       else None
     def superseded(size: Long, start: Long, end: Long): Boolean =
       plan.exists(p => p.size > size && p.start <= start && end <= p.end)
+    // one listing per directory of the tile tree
+    def subdirs(p: Path): Seq[Path] =
+      fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
     val stale = for {
-      sizeDir <- fs.listStatus(dir).toSeq if sizeDir.isDirectory
-      size <- seg(sizeDir.getPath.getName, "partition_size=").toSeq
-      startDir <- fs.listStatus(sizeDir.getPath).toSeq if startDir.isDirectory
-      start <- seg(startDir.getPath.getName, "start_partition=").toSeq
-      endDir <- fs.listStatus(startDir.getPath).toSeq if endDir.isDirectory
-      end <- seg(endDir.getPath.getName, "end_partition=").toSeq
-      rel = s"${sizeDir.getPath.getName}/${startDir.getPath.getName}/${endDir.getPath.getName}"
+      sizeDir <- subdirs(dir)
+      size <- seg(sizeDir.getName, "partition_size=").toSeq
+      startDir <- subdirs(sizeDir)
+      start <- seg(startDir.getName, "start_partition=").toSeq
+      endDir <- subdirs(startDir)
+      end <- seg(endDir.getName, "end_partition=").toSeq
+      rel = s"${sizeDir.getName}/${startDir.getName}/${endDir.getName}"
       if !planSet.contains(rel) && superseded(size, start, end)
-    } yield endDir.getPath
+    } yield endDir
     stale.foreach(fs.delete(_, true))
-    // drop now-empty intermediate dirs so listings stay clean
-    for {
-      sizeDir <- fs.listStatus(dir).toSeq if sizeDir.isDirectory &&
-        sizeDir.getPath.getName.startsWith("partition_size=")
-      startDir <- fs.listStatus(sizeDir.getPath).toSeq if startDir.isDirectory
-      if fs.listStatus(startDir.getPath).isEmpty
-    } fs.delete(startDir.getPath, false)
-    for {
-      sizeDir <- fs.listStatus(dir).toSeq if sizeDir.isDirectory &&
-        sizeDir.getPath.getName.startsWith("partition_size=")
-      if fs.listStatus(sizeDir.getPath).isEmpty
-    } fs.delete(sizeDir.getPath, false)
+    // drop the intermediate dirs the deletes left empty, so listings stay
+    // clean: only the parents of deleted tiles can have become empty
+    def dropEmpty(dirs: Seq[Path]): Seq[Path] =
+      dirs.distinct.filter(fs.listStatus(_).isEmpty).filter(fs.delete(_, false))
+    dropEmpty(dropEmpty(stale.map(_.getParent)).map(_.getParent))
     stale.map(_.toString)
   }
 
