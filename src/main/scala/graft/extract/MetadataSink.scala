@@ -1,5 +1,6 @@
 package graft.extract
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -39,7 +40,9 @@ object MetadataSink {
     * is purely the supersede cleanup, so it must never be lossy.
     * Returns the deleted directories. Safe after a successful extract:
     * plan content is deterministic and the watermark commits later, so a
-    * crash between write and prune just re-prunes next run (idempotent).
+    * crash between write and prune, or inside prune, just re-prunes next
+    * run (idempotent): the walk also drops the `partition_size=` and
+    * `start_partition=` directories it finds empty.
     */
   def pruneStalePartitions(tableDir: String, plan: Seq[Partition],
       conf: Configuration): Seq[String] = {
@@ -52,25 +55,31 @@ object MetadataSink {
       else None
     def superseded(size: Long, start: Long, end: Long): Boolean =
       plan.exists(p => p.size > size && p.start <= start && end <= p.end)
-    // one listing per directory of the tile tree
-    def subdirs(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+    // one listing per directory of the tile tree; the intermediate
+    // directories it finds empty (a crash between the deletes and the
+    // drop below leaves them) are noted for that drop
+    val bareSizes, bareStarts = mutable.ArrayBuffer.empty[Path]
+    def subdirs(p: Path, bare: mutable.Buffer[Path]): Seq[Path] = {
+      val ls = fs.listStatus(p)
+      if (ls.isEmpty) bare += p
+      ls.toSeq.filter(_.isDirectory).map(_.getPath)
+    }
     val stale = for {
-      sizeDir <- subdirs(dir)
+      sizeDir <- subdirs(dir, mutable.Buffer.empty)
       size <- seg(sizeDir.getName, "partition_size=").toSeq
-      startDir <- subdirs(sizeDir)
+      startDir <- subdirs(sizeDir, bareSizes)
       start <- seg(startDir.getName, "start_partition=").toSeq
-      endDir <- subdirs(startDir)
+      endDir <- subdirs(startDir, bareStarts)
       end <- seg(endDir.getName, "end_partition=").toSeq
       rel = s"${sizeDir.getName}/${startDir.getName}/${endDir.getName}"
       if !planSet.contains(rel) && superseded(size, start, end)
     } yield endDir
     stale.foreach(fs.delete(_, true))
-    // drop the intermediate dirs the deletes left empty, so listings stay
-    // clean: only the parents of deleted tiles can have become empty
+    // drop the intermediate dirs left empty, so listings stay clean: the
+    // parents of deleted tiles, and the ones the walk found empty
     def dropEmpty(dirs: Seq[Path]): Seq[Path] =
       dirs.distinct.filter(fs.listStatus(_).isEmpty).filter(fs.delete(_, false))
-    dropEmpty(dropEmpty(stale.map(_.getParent)).map(_.getParent))
+    dropEmpty(dropEmpty(stale.map(_.getParent) ++ bareStarts).map(_.getParent) ++ bareSizes)
     stale.map(_.toString)
   }
 
